@@ -5133,23 +5133,31 @@ def q_websocket_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _last_green_round() -> dict[str, int]:
+    """Entry name -> the latest round whose CORRECTNESS artifact
+    (``CORRECTNESS_r<round>.json`` beside this file) holds a
+    hash-matched row for it."""
+    import glob
+    import json
+    import re
+
+    last: dict[str, int] = {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r[0-9]*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                if isinstance(row, dict) and row.get("hash_match"):
+                    last[name] = max(rnd, last.get(name, 0))
+    return last
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordered for the driver's 50-row CORRECTNESS gate (the driver
-    # records only the first 50 entries per round). The front block is
-    # every entry with no driver-green row yet, in arrival order: the
-    # two r4 reds (both fixed — embedding_clusters' oracle returned
-    # HUGEINT sums the driver's pandas canonicalization degraded to
-    # float64 strings; hash_embed's array column crashed its pandas
-    # sort, now posexploded to scalars), the round-5-session encoder/
-    # codec gates (misc sinks, OTLP/cmetrics/ctraces wire, remote-
-    # write), and the seven in-round-5 additions (s3_key_format,
-    # host_cpu_percent, socket_framing, hec_json_parse, node_meminfo,
-    # nginx_status, journal_export). The tail of the window re-
-    # verifies r4 greens (grok_conf_parse..kubernetes_meta). INVARIANT
-    # (tools + test_registry): every oracle-paired entry at position
-    # 51+ already has a driver-green row from r1-r4.
-    return {
-        # round-5 late additions, never driver-verified yet -> front
+    """Every registry entry, ordered for the CORRECTNESS gate, which
+    records only the first ~50 entries per round: entries never
+    hash-verified come first, then the rest by the round they were last
+    green in, oldest first. Ties keep registry order."""
+    registry = {
         "remote_write_encode": q_remote_write_encode,
         "cmt_msgpack_encode": q_cmt_msgpack_encode,
         "ctr_msgpack_encode": q_ctr_msgpack_encode,
@@ -5167,7 +5175,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kusto_encode": q_kusto_encode,
         "websocket_encode": q_websocket_encode,
         "semdedup": q_semdedup,
-        # round-5 in-round additions (never driver-verified -> front)
         "s3_key_format": q_s3_key_format,
         "host_cpu_percent": q_host_cpu_percent,
         "socket_framing": q_socket_framing,
@@ -5175,9 +5182,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "node_meminfo": q_node_meminfo,
         "nginx_status": q_nginx_status,
         "journal_export": q_journal_export,
-        # bpe_tokenize is rows-only by design (the BPE merge walk is not
-        # SQL-expressible) so it can never earn a hash row — it stays in
-        # the never-hash-verified front block per test_registry.py
         "bpe_tokenize": q_bpe_tokenize,
         "otlp_logs_encode": q_otlp_logs_encode,
         "kinesis_encode": q_kinesis_encode,
@@ -5271,7 +5275,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_score": q_quality_score,
         "lang_id": q_lang_id,
         "token_count": q_token_count,
-        # ---- positions 51+: driver-green in r1-r3 ----
         "multimodal_resize": q_multimodal_resize,
         "yaml_conf": q_yaml_conf,
         "grok_parse": q_grok_parse,
@@ -5332,6 +5335,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_decode": q_multimodal_decode,
         "multimodal_frames": q_multimodal_frames,
     }
+    green = _last_green_round()
+    return dict(sorted(
+        registry.items(),
+        key=lambda kv: (kv[0] in green, green.get(kv[0], 0)),
+    ))
 
 
 # ------------------------------------------------------------ oracle SQL

@@ -1211,8 +1211,9 @@ class ClassicPipeline:
 
     def retry_limits(self) -> dict[str, int]:
         """Per-output parsed ``Retry_Limit`` (src/flb_output.c:874-896)
-        for delivery.deliver_outputs — default 1, no_limits/false -> -1,
-        no_retries -> 0."""
+        — default 1, no_limits/false -> -1, no_retries -> 0. These are
+        the limits ``run_classic_outputs`` hands to
+        ``delivery.deliver_outputs`` for its delivering outputs."""
         from fluent_bit_spark.delivery import parse_retry_limit
 
         return {
@@ -1469,127 +1470,108 @@ def start_classic_stream(
     return writer.start()
 
 
-def run_classic_outputs(
-    pipe: ClassicPipeline, out_dir: str, with_retry: bool = True
-) -> dict[str, int]:
-    """Deliver every output (file formats via sinks.write_per_tag;
-    null/stdout as noop) and return per-output row counts.
+# outputs that deliver nothing: counting their records is their only action
+_COUNT_ONLY = ("null", "stdout", "counter", "flowcounter")
 
-    ``with_retry`` runs each file delivery under the reference's flush
-    retry contract (delivery.deliver with the output's Retry_Limit):
-    a transient endpoint failure on one sink's write action is retried
-    with capped full-jitter backoff and never blocks the other sinks
-    (an exhausted sink is dropped and accounted, as the engine does).
+
+def run_classic_outputs(pipe: ClassicPipeline, out_dir: str) -> dict[str, int]:
+    """Deliver every output and return its delivered row count.
+
+    Each delivering output is one (partition key, line) frame written
+    by ``sinks.write_lines_per_tag`` under ``<out_dir>/<output id>``.
+    The flushes run under the reference's retry contract
+    (``delivery.deliver_outputs`` with each output's Retry_Limit): a
+    failed write is retried with capped full-jitter backoff, and one
+    failing output never blocks the others. The count is observed
+    from the write itself (``metrics.observe_stage``), so a delivered
+    output scans its input once; an output dropped after its retries
+    reports 0. null/stdout/counter/flowcounter deliver nothing and
+    report ``df.count()``.
     """
     import os
 
-    from fluent_bit_spark.delivery import FLB_OK, deliver
-    from fluent_bit_spark.sinks import write_per_tag
+    from fluent_bit_spark import sinks
+    from fluent_bit_spark.delivery import deliver_outputs
+    from fluent_bit_spark.metrics import observe_stage
 
-    limits = pipe.retry_limits()
-    counts: dict[str, int] = {}
+    flushes = {}
+    observations = {}
     for oid, df in pipe.outputs.items():
         sec = pipe.output_sections[oid]
-        if sec.name == "file":
-            fmt = (sec.get("format") or "json_lines").replace("out_file", "")
-            ts = "event_time" if "event_time" in df.columns else None
+        if sec.name in _COUNT_ONLY:
+            continue
+        # plan only, on the driver: an unsupported plugin or a config
+        # error (e.g. out_es without event_time) raises here instead of
+        # failing every flush
+        encode_output_lines(df, sec)
 
-            def flush(df=df, oid=oid, fmt=fmt, ts=ts, sec=sec) -> int:
-                write_per_tag(
-                    df, os.path.join(out_dir, oid),
-                    fmt="json_lines" if fmt == "plain" else fmt,
-                    template=sec.get("template"), ts_col=ts,
-                    delimiter=sec.get("delimiter"),
-                    label_delimiter=sec.get("label_delimiter"),
-                )
-                return FLB_OK
+        def flush(df=df, sec=sec, oid=oid) -> None:
+            # a fresh Observation per attempt: a failed write never
+            # completes its own
+            routed, observations[oid] = observe_stage(df, oid)
+            frame = encode_output_lines(routed, sec)
+            sinks.write_lines_per_tag(
+                frame, os.path.join(out_dir, oid), tag_col=frame.columns[0])
 
-            if with_retry:
-                deliver(flush, retry_limit=limits[oid])
-            else:
-                flush()
+        flushes[oid] = flush
+    delivered = deliver_outputs(flushes, pipe.retry_limits())
+    counts: dict[str, int] = {}
+    for oid, df in pipe.outputs.items():
+        if oid not in delivered:
             counts[oid] = df.count()
-        elif sec.name in (
-            "syslog", "influxdb", "gelf", "loki", "splunk", "datadog",
-            "es", "opensearch", "stackdriver", "nats", "logdna", "slack",
-            "td", "nrlogs", "http", "websocket", "kafka_rest",
-            "kinesis_streams", "kinesis_firehose", "bigquery",
-        ):
-            encoded = encode_output_lines(df, sec)
-
-            def flush_lines(encoded=encoded, oid=oid) -> int:
-                from fluent_bit_spark.sinks import write_lines_per_tag
-
-                write_lines_per_tag(encoded, os.path.join(out_dir, oid))
-                return FLB_OK
-
-            if with_retry:
-                deliver(flush_lines, retry_limit=limits[oid])
-            else:
-                flush_lines()
-            counts[oid] = df.count()
-        elif sec.name == "kafka":
-            # (topic, key, value) rows partitioned by topic — the
-            # file-delivery analog of the Kafka sink's record shape;
-            # at scale swap the writer for df.write.format("kafka")
-            from fluent_bit_spark.functions.kafka_out import to_kafka_records
-
-            clean = df.select(
-                *[c for c in df.columns if not c.startswith("_")]
-            )
-            recs = to_kafka_records(
-                clean,
-                "event_time",
-                topics=(sec.get("topics") or "fluent-bit").split(","),
-                topic_key=sec.get("topic_key"),
-                dynamic_topic=(sec.get("dynamic_topic") or "off").lower()
-                in ("on", "true"),
-                message_key=sec.get("message_key"),
-                message_key_field=sec.get("message_key_field"),
-                timestamp_key=sec.get("timestamp_key") or "@timestamp",
-                timestamp_format=sec.get("timestamp_format") or "double",
-                fmt=(sec.get("format") or "json").lower(),
-                raw_log_key=sec.get("raw_log_key"),
-            )
-
-            def flush_kafka(recs=recs, oid=oid) -> int:
-                (
-                    recs.withColumn(
-                        "line",
-                        F.to_json(F.struct("key", "value")),
-                    )
-                    .select("topic", "line")
-                    .write.mode("overwrite")
-                    .partitionBy("topic")
-                    .text(os.path.join(out_dir, oid))
-                )
-                return FLB_OK
-
-            if with_retry:
-                deliver(flush_kafka, retry_limit=limits[oid])
-            else:
-                flush_kafka()
-            counts[oid] = df.count()
-        elif sec.name in ("null", "stdout", "counter", "flowcounter"):
-            counts[oid] = df.count()
+        elif delivered[oid].ok:
+            counts[oid] = observations[oid].get["records"]
         else:
-            raise ValueError(f"output plugin {sec.name!r} not supported")
+            counts[oid] = 0  # dropped after its retries
     return counts
 
 
 def encode_output_lines(df, sec):
-    """(tag, line) DataFrame for the encoder-backed output plugins
-    (out_syslog / out_influxdb / out_gelf), mapping each plugin's
-    config keys onto the columnar encoders. The network transport
-    itself is out of scope (SURVEY §2.9) — delivery is file-per-tag,
-    but the bytes per record match what the reference would put on the
-    socket."""
+    """(partition key, line) DataFrame for every delivering output
+    plugin, mapping each plugin's config keys onto the columnar
+    encoders. The key is ``tag``, or ``topic`` for out_kafka. The
+    network transport itself is out of scope (SURVEY §2.9) — delivery
+    is file-per-key, but the bytes per record match what the reference
+    would put on the socket."""
+    if sec.name == "file":
+        from fluent_bit_spark.sinks import encode_line
+
+        fmt = (sec.get("format") or "json_lines").replace("out_file", "")
+        line = encode_line(
+            df, "json_lines" if fmt == "plain" else fmt,
+            template=sec.get("template"),
+            ts_col="event_time" if "event_time" in df.columns else None,
+            delimiter=sec.get("delimiter"),
+            label_delimiter=sec.get("label_delimiter"),
+        )
+        return df.select("tag", line.alias("line"))
     # '_'-prefixed columns are pipeline-internal (record order,
     # lineage) — never part of the user's record map in any format.
     # backtick-quoted, not bare names: keys may contain dots
     # (logging.googleapis.com/*)
     df = df.select(*[_bt(c) for c in df.columns if not c.startswith("_")])
     ts = "event_time" if "event_time" in df.columns else None
+    if sec.name == "kafka":
+        # (topic, key, value) records, one JSON line each — the file
+        # analog of the Kafka sink's record shape
+        from fluent_bit_spark.functions.kafka_out import to_kafka_records
+
+        recs = to_kafka_records(
+            df,
+            "event_time",
+            topics=(sec.get("topics") or "fluent-bit").split(","),
+            topic_key=sec.get("topic_key"),
+            dynamic_topic=(sec.get("dynamic_topic") or "off").lower()
+            in ("on", "true"),
+            message_key=sec.get("message_key"),
+            message_key_field=sec.get("message_key_field"),
+            timestamp_key=sec.get("timestamp_key") or "@timestamp",
+            timestamp_format=sec.get("timestamp_format") or "double",
+            fmt=(sec.get("format") or "json").lower(),
+            raw_log_key=sec.get("raw_log_key"),
+        )
+        return recs.select(
+            "topic", F.to_json(F.struct("key", "value")).alias("line"))
     if sec.name == "syslog":
         from fluent_bit_spark.functions.syslog_out import to_syslog
 
@@ -1866,7 +1848,9 @@ def encode_output_lines(df, sec):
             date_key=sec.get("json_date_key") or "timestamp",
         )
         return df.select("tag", line.alias("line"))
-    # gelf (out_gelf's gelf_* field keys; flb_pack_gelf.c rendering)
+    if sec.name != "gelf":
+        raise ValueError(f"output plugin {sec.name!r} not supported")
+    # out_gelf's gelf_* field keys; flb_pack_gelf.c rendering
     from fluent_bit_spark.functions.gelf import to_gelf
 
     msg_key = sec.get("gelf_short_message_key")

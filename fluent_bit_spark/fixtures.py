@@ -1,9 +1,9 @@
 """Test fixtures: the reference's 11-record stream-processor sample
 stream, loaded with per-record key presence preserved.
 
-Source: /root/reference/tests/internal/data/stream_processor/samples.json
-(FIXTURES.md §3). The stream is schemaless msgpack in the reference;
-here it becomes a typed DataFrame plus a ``_present`` array recording
+Source: tests/internal/data/stream_processor/samples.json of a
+fluent-bit source tree (FIXTURES.md §3). The stream is schemaless
+msgpack in the reference; here it becomes a typed DataFrame plus a ``_present`` array recording
 which keys each record actually carried — needed because the SP
 dialect distinguishes "key missing" from "key present with nil"
 (IS NULL == exists-and-nil, see sp/translate.py).
@@ -16,11 +16,13 @@ dialect distinguishes "key missing" from "key present with nil"
 from __future__ import annotations
 
 import json
+import os
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
-SAMPLES_PATH = "/root/reference/tests/internal/data/stream_processor/samples.json"
+# the samples file, relative to the root of a fluent-bit source tree
+SAMPLES_PATH = "tests/internal/data/stream_processor/samples.json"
 
 _SCHEMA = (
     "id long, word1 string, word2 string, word3 string, word5 string, "
@@ -43,15 +45,22 @@ def _fmt_number(v: object) -> str | None:
 
 def load_samples(
     spark: SparkSession,
-    path: str = SAMPLES_PATH,
+    reference_dir: str,
     copies: int = 1,
     base_ts: datetime | None = None,
     tag: str = "samples",
 ) -> DataFrame:
-    """Load samples.json; event_time = base + id seconds (pinned so
+    """Load samples.json from the fluent-bit source tree at
+    ``reference_dir``; event_time = base + id seconds (pinned so
     event-time windows reproduce the reference's processing-time
     goldens, SURVEY.md §2.6). ``copies`` replays the stream N times at
     identical timestamps (the window unit tests push it 5x)."""
+    path = os.path.join(reference_dir, SAMPLES_PATH)
+    if not os.path.isfile(path):
+        raise FileNotFoundError(
+            f"stream-processor samples not found at {path}: "
+            "reference_dir must be the root of a fluent-bit source tree"
+        )
     if base_ts is None:
         base_ts = datetime(2026, 1, 1, 0, 0, 0, tzinfo=timezone.utc)
     rows = []

@@ -1,4 +1,4 @@
-"""Pipeline metrics & lineage — the analog of fluent-bit's internal
+"""Pipeline metrics — the analog of fluent-bit's internal
 counters.
 
 Reference: input records/bytes (src/flb_input_chunk.c:1663-1679),
@@ -7,27 +7,16 @@ ok/error/retry (include/fluent-bit/flb_metrics.h:46-59), periodic
 exporter (src/flb_metrics_exporter.c:38-140).
 
 Spark design: metrics must not add actions (a .count() per stage would
-re-run the 100 TB scan). Two mechanisms:
-- ``observe()`` named aggregates ride along the existing job and are
-  collected from the query execution listener / observation object.
-- per-partition lineage rows via ``mapInPandas`` appendix: each
-  partition emits one row (stage, partition_id, records, bytes,
-  parse_failures) into a metrics table — mirroring "every partition
-  emits lineage + metrics rows" from the north rule.
+re-run the 100 TB scan). ``observe()`` named aggregates ride along the
+job that does the work and are read from its ``Observation`` once that
+action finishes (``classic.run_classic_outputs`` counts each output's
+delivered rows this way).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-METRICS_SCHEMA = (
-    "stage string, partition_id int, records_in long, records_out long, "
-    "parse_failures long, bytes long"
-)
 
 
 def observe_stage(df: DataFrame, stage: str, parse_ok_col: str | None = None,
@@ -40,46 +29,3 @@ def observe_stage(df: DataFrame, stage: str, parse_ok_col: str | None = None,
     if bytes_col:
         cols.append(F.sum(F.length(F.col(bytes_col)).cast("long")).alias("bytes"))
     return df.observe(obs, *cols), obs
-
-
-def partition_metrics(df: DataFrame, stage: str, parse_ok_col: str | None = None,
-                      bytes_col: str | None = None) -> DataFrame:
-    """One metrics row per partition (lineage table contents).
-
-    Runs as its own lightweight pass (column-pruned scan of at most two
-    columns); the 100 TB body columns are never touched.
-    """
-    cols = []
-    if parse_ok_col:
-        cols.append(parse_ok_col)
-    if bytes_col:
-        cols.append(bytes_col)
-    slim = df.select(*cols) if cols else df.select(F.lit(1).alias("_one"))
-
-    def emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        records = 0
-        failures = 0
-        nbytes = 0
-        for pdf in it:
-            records += len(pdf)
-            if parse_ok_col:
-                failures += int((~pdf[parse_ok_col].fillna(False)).sum())
-            if bytes_col:
-                nbytes += int(pdf[bytes_col].astype(str).str.len().sum())
-        yield pd.DataFrame(
-            [
-                {
-                    "stage": stage,
-                    "partition_id": pid,
-                    "records_in": records,
-                    "records_out": records,
-                    "parse_failures": failures,
-                    "bytes": nbytes,
-                }
-            ]
-        )
-
-    return slim.mapInPandas(emit, METRICS_SCHEMA)

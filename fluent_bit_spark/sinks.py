@@ -6,15 +6,14 @@ JSON family of flb_pack_msgpack_to_json_format (src/flb_pack.c:918,
 date formats include/fluent-bit/flb_pack.h:39-49).
 
 Each encoder maps a DataFrame to a single ``line: string`` column (+
-optional tag partitioning); delivery is then any Spark text/parquet
-write — ``write_per_tag`` mirrors out_file's file-per-tag layout with
-one partitioned pass. At scale prefer columnar sinks (parquet/
-Iceberg); these text encoders exist for reference-format parity.
+optional tag partitioning); ``write_lines_per_tag`` then delivers it
+in out_file's file-per-tag layout with one partitioned pass. At scale
+prefer columnar sinks (parquet/Iceberg); these text encoders exist for
+reference-format parity.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -146,12 +145,40 @@ def check_delimiter(s: str | None, default: str) -> str:
     return default
 
 
+def encode_line(
+    df: DataFrame,
+    fmt: str = "json_lines",
+    template: str | None = None,
+    ts_col: str | None = None,
+    delimiter: str | None = None,
+    label_delimiter: str | None = None,
+) -> Column:
+    """out_file's ``Format`` as the line column of each record."""
+    if fmt == "template":
+        if not template:
+            raise ValueError("template format needs a template string")
+        return template_line(df, template, ts_col)
+    if fmt == "csv":
+        return csv_line(df, ts_col=ts_col,
+                        delimiter=check_delimiter(delimiter, ","))
+    if fmt == "ltsv":
+        return ltsv_line(
+            df, ts_col=ts_col,
+            delimiter=check_delimiter(delimiter, "\t"),
+            label_delimiter=check_delimiter(label_delimiter, ":"),
+        )
+    if fmt in ENCODERS:
+        return ENCODERS[fmt](df, ts_col=ts_col)
+    raise ValueError(f"unknown format {fmt!r}")
+
+
 def write_lines_per_tag(
     df: DataFrame, out_dir: str, tag_col: str = "tag", line_col: str = "line"
 ) -> None:
-    """File-per-tag delivery of a pre-encoded wire-format line column
-    (syslog/influx/gelf encoders) — same one-pass partitioned layout
-    as write_per_tag."""
+    """File-per-tag delivery of a pre-encoded line column in ONE
+    partitioned pass (the out_file directory layout without N scans):
+    ``<out_dir>/<tag_col>=<value>/part-*``. Every text-delivering
+    output writes through here."""
     (
         df.select(F.col(tag_col), F.col(line_col).alias("value"))
         .write.mode("overwrite")
@@ -170,32 +197,9 @@ def write_per_tag(
     delimiter: str | None = None,
     label_delimiter: str | None = None,
 ) -> None:
-    """File-per-tag delivery in ONE partitioned pass (the out_file
-    directory layout without N scans)."""
-    if fmt == "template":
-        if not template:
-            raise ValueError("template format needs a template string")
-        line = template_line(df, template, ts_col)
-    elif fmt == "csv":
-        line = csv_line(df, ts_col=ts_col,
-                        delimiter=check_delimiter(delimiter, ","))
-    elif fmt == "ltsv":
-        line = ltsv_line(
-            df, ts_col=ts_col,
-            delimiter=check_delimiter(delimiter, "\t"),
-            label_delimiter=check_delimiter(label_delimiter, ":"),
-        )
-    elif fmt in ENCODERS:
-        line = ENCODERS[fmt](df, ts_col=ts_col)
-    else:
-        raise ValueError(f"unknown format {fmt!r}")
-    (
-        df.withColumn("value", line)
-        .select(tag_col, "value")
-        .write.mode("overwrite")
-        .partitionBy(tag_col)
-        .text(os.path.join(out_dir))
-    )
+    """out_file delivery: ``encode_line`` then ``write_lines_per_tag``."""
+    line = encode_line(df, fmt, template, ts_col, delimiter, label_delimiter)
+    write_lines_per_tag(df.select(tag_col, line.alias("line")), out_dir, tag_col)
 
 
 def s3_key(

@@ -351,14 +351,12 @@ def nginx_status_df(df, text_col: str = "status"):
     lines = F.split(F.col(text_col), "\n")
 
     def num(line_idx: int, pattern: str, group: int):
-        return F.try_to_number(
-            F.nullif(
-                F.regexp_extract(
-                    F.coalesce(F.try_element_at(lines, F.lit(line_idx)),
-                               F.lit("")),
-                    pattern, group),
-                F.lit("")),
-            F.lit("999999999999999"))
+        return F.nullif(
+            F.regexp_extract(
+                F.coalesce(F.try_element_at(lines, F.lit(line_idx)),
+                           F.lit("")),
+                pattern, group),
+            F.lit("")).try_cast("long")
 
     triple = r"^\s*(\d+)\s+(\d+)\s+(\d+)"
     # anchored like the twin's re.match — a line merely CONTAINING

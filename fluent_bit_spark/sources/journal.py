@@ -68,7 +68,11 @@ def journal_export_records(
                 rec = {}  # blob cut short: a half-transferred entry
                 break     # sd-journal would never emit
             val_b = data[pos:pos + size]
-            pos += size + 1  # trailing newline after the blob
+            pos += size
+            if pos < n and data[pos] != 0x0A:
+                rec = {}  # no newline after the blob: a corrupt size
+                break     # misaligned the rest, drop the entry whole
+            pos += 1  # trailing newline after the blob
         key = key_b.decode("utf-8", "replace")
         if lowercase:
             key = key.lower()

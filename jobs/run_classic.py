@@ -8,8 +8,10 @@
 The config is the reference's own format: classic ini (with @SET /
 @INCLUDE / ${VAR} / [SERVICE] Parsers_File) or the yaml form —
 anything load_classic_conf accepts. Batch mode materializes every
-[OUTPUT] under --out-dir and prints per-output row counts as one JSON
-line; --streaming follows tail inputs with checkpointed resume
+[OUTPUT] under --out-dir and prints per-output counts as one JSON
+line: the rows each output delivered (0 for an output dropped after
+its Retry_Limit), or the rows routed to a null/stdout/counter/
+flowcounter output; --streaming follows tail inputs with checkpointed resume
 (foreachBatch delivery, [SERVICE] Flush as the trigger interval).
 """
 

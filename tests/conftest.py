@@ -8,6 +8,35 @@ from fluent_bit_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
+# the fluent-bit source tree the reference goldens are read from: a
+# checkout named "reference" beside this repository
+REFERENCE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+)
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "needs_reference: reads the fluent-bit source tree at "
+        "REFERENCE_DIR; skipped when that tree is absent (every test "
+        "that uses the reference_dir fixture carries it)",
+    )
+
+
+def pytest_collection_modifyitems(items):
+    for item in items:
+        if "reference_dir" in getattr(item, "fixturenames", ()):
+            item.add_marker("needs_reference")
+
+
+def pytest_runtest_setup(item):
+    if item.get_closest_marker("needs_reference") and not os.path.isdir(
+        REFERENCE_DIR
+    ):
+        pytest.skip(f"fluent-bit reference tree not found at {REFERENCE_DIR}")
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -19,6 +48,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def reference_dir() -> str:
+    return REFERENCE_DIR
 
 
 @pytest.fixture(autouse=True)

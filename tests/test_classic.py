@@ -68,6 +68,90 @@ def test_dummy_input_and_outputs(spark, tmp_path):
     assert pipe.outputs["counter.1"].first()["count"] == 5
 
 
+_TWO_DELIVERING_AND_COUNTER = """
+[INPUT]
+    Name    dummy
+    Tag     app.log
+    Dummy   {"message":"boot ok","level":"err"}
+    Samples 4
+
+[OUTPUT]
+    Name  file
+    Match app.*
+    %s
+
+[OUTPUT]
+    Name  loki
+    Match app.*
+
+[OUTPUT]
+    Name  counter
+    Match *
+"""
+
+
+def _sql_executions(spark, group: str) -> list:
+    """SQL executions that ran jobs of ``group``, from Spark's status
+    store (the one the web UI shows; it works with the UI disabled)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    job_ids = {
+        j.jobId() for j in seq(jsc.statusStore().jobsList(None))
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group
+    }
+    store = spark._jsparkSession.sharedState().statusStore()
+    return [
+        e for e in seq(store.executionsList())
+        if {int(k) for k in seq(e.jobs().keys().toSeq())} & job_ids
+    ]
+
+
+def test_delivering_outputs_scan_once(spark, tmp_path):
+    """One write per delivering output and one count for the counter:
+    the delivered counts come from the writes, not a second scan."""
+    conf = _TWO_DELIVERING_AND_COUNTER % ""
+    pipe = build_classic_pipeline(spark, conf)
+    sc = spark.sparkContext
+    group = f"classic-scan-once-{id(pipe)}"
+    sc.setJobGroup(group, group)
+    try:
+        counts = run_classic_outputs(pipe, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {"file.0": 4, "loki.1": 4, "counter.2": 1}
+    assert len(_sql_executions(spark, group)) == 3
+
+
+def test_dropped_output_reports_zero(spark, tmp_path, monkeypatch):
+    """An output whose write fails under Retry_Limit no_retries is
+    dropped and reports 0; the other output is still delivered."""
+    from fluent_bit_spark import sinks
+
+    write = sinks.write_lines_per_tag
+
+    def flaky(df, out_dir, *args, **kwargs):
+        if out_dir.endswith("file.0"):
+            raise OSError("endpoint unavailable")
+        write(df, out_dir, *args, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_lines_per_tag", flaky)
+    conf = _TWO_DELIVERING_AND_COUNTER % "Retry_Limit no_retries"
+    pipe = build_classic_pipeline(spark, conf)
+    counts = run_classic_outputs(pipe, str(tmp_path))
+    assert counts == {"file.0": 0, "loki.1": 4, "counter.2": 1}
+    assert not (tmp_path / "file.0").exists()
+    lines = [
+        ln for p in (tmp_path / "loki.1").glob("*/part-*")
+        for ln in p.read_text().splitlines()
+    ]
+    assert len(lines) == 4
+
+
 def test_tail_with_parser_grep_rewrite(spark, tmp_path):
     log = tmp_path / "app.log"
     log.write_text(

@@ -441,12 +441,16 @@ def test_nginx_status_df_matches_driver(spark):
     embedded = good.replace("Reading:", "NotReading:", 1).replace(
         "NotReading:", "Not Reading:", 1).replace(
         "Not Reading:", "prefix Reading:", 1)
+    # counters of 1e15 and more (15+ digits) parse like the twin's int()
+    huge = good.replace(" 16630948 16630948 31070465 ",
+                        " 1000000000000000 999999999999999 12345678901234567 ")
     df = spark.createDataFrame(
-        [(1, good), (2, bad), (3, short), (4, embedded)],
+        [(1, good), (2, bad), (3, short), (4, embedded), (5, huge)],
         "i long, s string")
     rows = {r["i"]: r.asDict() for r in nginx_status_df(df, "s").collect()}
-    want = nginx_stub_status_record(good)
-    assert set(rows) == {1}
-    got = {k: v for k, v in rows[1].items() if k != "i"}
-    assert got == want
+    assert set(rows) == {1, 5}
+    for i, page in ((1, good), (5, huge)):
+        got = {k: v for k, v in rows[i].items() if k != "i"}
+        assert got == nginx_stub_status_record(page)
+    assert rows[5]["requests"] == 12345678901234567
     assert nginx_stub_status_record(bad) is None

@@ -67,6 +67,17 @@ def test_truncated_binary_capture_drops_cleanly():
     assert journal_export_records(data) == []
 
 
+def test_corrupt_binary_size_drops_entry():
+    """A size field one byte short leaves a non-newline byte after the
+    blob: the entry is dropped whole instead of yielding misaligned
+    garbage fields; complete preceding entries survive."""
+    payload = b"line1\nline2"
+    data = (b"MESSAGE=ok\n\n"
+            b"PRIORITY=3\nMESSAGE\n" + struct.pack("<Q", len(payload) - 1)
+            + payload + b"\nSYSLOG_IDENTIFIER=x\n\n")
+    assert journal_export_records(data) == [{"MESSAGE": "ok"}]
+
+
 def test_parse_journal_export_df(spark):
     rows = [(1, "MESSAGE=a\nTAG=x\nTAG=y\n\nMESSAGE=b\n\n"),
             (2, "MESSAGE=c\n\n")]

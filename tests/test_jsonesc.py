@@ -17,12 +17,10 @@ from pyspark.sql import functions as F
 
 from fluent_bit_spark.functions.jsonesc import flb_json_escape
 
-PACK = "/root/reference/tests/internal/data/pack"
-
-
-def _pairs():
+def _pairs(reference_dir):
     out = []
-    for mp in sorted(glob.glob(os.path.join(PACK, "*.mp"))):
+    pack = os.path.join(reference_dir, "tests", "internal", "data", "pack")
+    for mp in sorted(glob.glob(os.path.join(pack, "*.mp"))):
         base = mp[:-3]
         txt, js = base + ".txt", base + ".json"
         if os.path.exists(txt) and os.path.exists(js):
@@ -34,11 +32,11 @@ def _pairs():
     return out
 
 
-def test_reference_pack_fixture_goldens(spark):
+def test_reference_pack_fixture_goldens(spark, reference_dir):
     """Byte-exact escape parity on every utf8_*/mixed_* fixture pair
     shipped with the reference (BMP and astral codepoints, ANSI
     escapes, accented latin, the relaxed sample)."""
-    pairs = _pairs()
+    pairs = _pairs(reference_dir)
     assert len(pairs) >= 7  # utf8_bell/copyright/hokke/relaxed, mixed_001-003
     rows = [(name, raw.decode("utf-8")) for name, raw, _ in pairs]
     df = spark.createDataFrame(rows, "name string, s string")

@@ -10,6 +10,7 @@ shipped /root/reference/scripts/*.lua verbatim.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -271,14 +272,14 @@ class TestLuaScript:
 
 
 class TestReferenceScripts:
-    def test_append_tag_lua_verbatim(self):
-        src = open("/root/reference/scripts/append_tag.lua").read()
+    def test_append_tag_lua_verbatim(self, reference_dir):
+        src = open(os.path.join(reference_dir, "scripts", "append_tag.lua")).read()
         s = LuaScript(src, call="append_tag")
         code, ts, rec = s.make_runtime().invoke("kube.app", 7.0, {"k": "v"})
         assert (code, ts, rec) == (1, 7.0, {"k": "v", "tag": "kube.app"})
 
-    def test_override_time_lua_verbatim(self):
-        src = open("/root/reference/scripts/override_time.lua").read()
+    def test_override_time_lua_verbatim(self, reference_dir):
+        src = open(os.path.join(reference_dir, "scripts", "override_time.lua")).read()
         s = LuaScript(src, call="override_time")
         code, ts, rec = s.make_runtime().invoke(
             "t", 1.0, {"KEY_OF_TIMESTAMP": 1530239065.807368, "data": "sample"}
@@ -286,15 +287,15 @@ class TestReferenceScripts:
         assert code == 1 and ts == pytest.approx(1530239065.807368)
         assert rec["data"] == "sample"
 
-    def test_test_lua_cb_replace_verbatim(self):
-        src = open("/root/reference/scripts/test.lua").read()
+    def test_test_lua_cb_replace_verbatim(self, reference_dir):
+        src = open(os.path.join(reference_dir, "scripts", "test.lua")).read()
         s = LuaScript(src, call="cb_replace")
         code, ts, rec = s.make_runtime().invoke("t", 3.0, {"key": "val"})
         assert code == 1
         assert rec == {"new": 12345, "old": {"key": "val"}}
 
-    def test_rate_limit_lua_verbatim(self):
-        src = open("/root/reference/scripts/rate_limit.lua").read()
+    def test_rate_limit_lua_verbatim(self, reference_dir):
+        src = open(os.path.join(reference_dir, "scripts", "rate_limit.lua")).read()
         s = LuaScript(src, call="rate_limit")
         rt = s.make_runtime()
         # group_bucket_limit=6000 is per docker_id; exercise the counter

@@ -167,7 +167,7 @@ def test_classic_misc_outputs(spark, tmp_path):
     Match  svc.*
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"nats.0": 2, "logdna.1": 2, "http.2": 2,
                       "nrlogs.3": 2}
 
@@ -246,7 +246,7 @@ def test_classic_websocket_and_kafka_rest(spark, tmp_path):
     partition   2
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"websocket.0": 1, "kafka_rest.1": 1}
 
     def first_line(oid):

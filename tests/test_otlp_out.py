@@ -249,7 +249,7 @@ def test_classic_kinesis_bigquery_outputs(spark, tmp_path):
     Match  svc.*
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"kinesis_streams.0": 2, "kinesis_firehose.1": 2,
                       "bigquery.2": 2}
 

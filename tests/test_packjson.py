@@ -9,22 +9,20 @@ vectors of test_json_pack_surrogate_pairs (pack.c:523).
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.functions.packjson import dedup_map_keys
 
-DUP_IN = "/root/reference/tests/internal/data/pack/dup_keys_in.json"
-DUP_OUT = "/root/reference/tests/internal/data/pack/dup_keys_out.json"
-
-
-def test_dup_keys_fixture_golden(spark):
+def test_dup_keys_fixture_golden(spark, reference_dir):
     """The reference fixture: dedup keeps the LAST occurrence of
     each key and orders survivors by last occurrence, at every
     nesting level (the record's own trailing 'date'/'key1' win)."""
-    raw = open(DUP_IN).read()
+    pack = os.path.join(reference_dir, "tests", "internal", "data", "pack")
+    raw = open(os.path.join(pack, "dup_keys_in.json")).read()
     record_json = raw[raw.index(",") + 1:raw.rindex("]")].strip()
-    expected = json.loads(open(DUP_OUT).read())
+    expected = json.loads(open(os.path.join(pack, "dup_keys_out.json")).read())
 
     df = spark.createDataFrame([(record_json,)], "raw string")
     top = df.select(

@@ -3,6 +3,7 @@
 parser_logfmt.c, parser_regex.c) re-expressed over DataFrames.
 """
 
+import os
 from datetime import datetime
 
 import pytest
@@ -15,12 +16,10 @@ from fluent_bit_spark.parsers.compile import (
 )
 from fluent_bit_spark.parsers.config import ParserSpec
 
-REF_CONF = "/root/reference/conf/parsers.conf"
-
 
 @pytest.fixture(scope="module")
-def specs():
-    with open(REF_CONF) as fh:
+def specs(reference_dir):
+    with open(os.path.join(reference_dir, "conf", "parsers.conf")) as fh:
         return parse_parsers_conf(fh.read())
 
 

@@ -202,7 +202,7 @@ def test_classic_encoder_outputs(spark, tmp_path):
     Gelf_Level_Key         level
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"syslog.0": 3, "influxdb.1": 3, "gelf.2": 3}
 
     def lines(oid):
@@ -414,7 +414,7 @@ def test_classic_loki_splunk_datadog(spark, tmp_path):
     dd_tags         env:ci
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"loki.0": 2, "splunk.1": 2, "datadog.2": 2}
 
     def lines(oid):
@@ -529,7 +529,7 @@ def test_classic_es_output(spark, tmp_path):
     Include_Tag_Key    On
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"es.0": 2}
     lines = []
     for p in glob.glob(os.path.join(str(tmp_path), "es.0", "*", "part-*")):
@@ -614,7 +614,7 @@ def test_classic_kafka_output(spark, tmp_path):
     Message_Key_Field svc
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"kafka.0": 2}
     lines = []
     for p in glob.glob(

@@ -1,5 +1,5 @@
-"""Stream-processor SQL goldens, ported from
-/root/reference/tests/internal/include/sp_select_keys.h (18 queries)
+"""Stream-processor SQL goldens, ported from the reference's
+tests/internal/include/sp_select_keys.h (18 queries)
 and sp_window.h (6 windowed queries), run over the reference's own
 samples.json fixture."""
 
@@ -10,8 +10,8 @@ from fluent_bit_spark.sp import parse_sql, run_query
 
 
 @pytest.fixture(scope="module")
-def samples(spark):
-    return load_samples(spark)
+def samples(spark, reference_dir):
+    return load_samples(spark, reference_dir)
 
 
 def q(df, sql):
@@ -155,9 +155,9 @@ def test_record_not_contains(samples):
 
 
 @pytest.fixture(scope="module")
-def samples5(spark):
+def samples5(spark, reference_dir):
     # the window unit tests replay the 11-record stream 5 times
-    return load_samples(spark, copies=5)
+    return load_samples(spark, reference_dir, copies=5)
 
 
 def test_window_tumbling_sum_avg(samples5):
@@ -195,13 +195,13 @@ def test_window_tumbling_groupby(samples5):
     assert abs(rows[True]["AVG(bytes)"] - 10.0) < 1e-9
 
 
-def test_window_hopping_panes(spark):
+def test_window_hopping_panes(spark, reference_dir):
     # Event-time hopping semantics (exact per-pane, SURVEY.md §4 note:
     # Spark computes each pane exactly; the reference subtracts expired
     # slots and its MIN/MAX are approximate). ids 0..10 at seconds
     # 0..10, window 5s advance 5s -> panes [0,5) ids 0-4, [5,10) 5-9,
     # [10,15) id 10.
-    df = load_samples(spark)
+    df = load_samples(spark, reference_dir)
     out = q(
         df,
         "SELECT SUM(id), COUNT(*) FROM STREAM:FLB WINDOW HOPPING (5 SECOND, "
@@ -211,8 +211,8 @@ def test_window_hopping_panes(spark):
     assert got == [(10, 1), (10, 5), (35, 5)]
 
 
-def test_window_hopping_overlap(spark):
-    df = load_samples(spark)
+def test_window_hopping_overlap(spark, reference_dir):
+    df = load_samples(spark, reference_dir)
     out = q(
         df,
         "SELECT COUNT(*) FROM STREAM:FLB WINDOW HOPPING (4 SECOND, ADVANCE BY 2 SECOND);",

@@ -207,7 +207,7 @@ def test_classic_stackdriver_output(spark, tmp_path):
     text_payload_key  message
 """
     pipe = build_classic_pipeline(spark, conf)
-    counts = run_classic_outputs(pipe, str(tmp_path), with_retry=False)
+    counts = run_classic_outputs(pipe, str(tmp_path))
     assert counts == {"stackdriver.0": 2}
     lines = []
     for p in glob.glob(os.path.join(str(tmp_path), "stackdriver.0",

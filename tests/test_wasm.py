@@ -9,6 +9,7 @@ placement). Interpreter semantics vs the wasm core spec.
 from __future__ import annotations
 
 import json
+import os
 import struct
 
 import pytest
@@ -395,12 +396,17 @@ class TestSparkOperator:
 # ------------------------------------------- reference binary goldens
 
 
-DPATH_WASM = "/root/reference/tests/runtime/data/wasm"
+@pytest.fixture
+def load_wasm(reference_dir):
+    """Loader of the reference's prebuilt tests/runtime/data/wasm
+    binaries."""
 
+    def load(name: str, fn: str, **kw) -> WasmScript:
+        path = os.path.join(reference_dir, "tests", "runtime", "data", "wasm", name)
+        with open(path, "rb") as fh:
+            return WasmScript(fh.read(), fn, **kw)
 
-def _load(name: str, fn: str, **kw) -> WasmScript:
-    with open(f"{DPATH_WASM}/{name}", "rb") as fh:
-        return WasmScript(fh.read(), fn, **kw)
+    return load
 
 
 class TestReferenceBinaries:
@@ -412,22 +418,22 @@ class TestReferenceBinaries:
     end-to-end check of the decoder, the WASI stub surface, and the
     filter ABI against artifacts we did not build."""
 
-    def test_helloworld_golden(self):
+    def test_helloworld_golden(self, load_wasm):
         # flb_test_helloworld: say_hello.wasm passes the record through
-        rt = _load("say_hello.wasm", "filter_say_hello").make_runtime()
+        rt = load_wasm("say_hello.wasm", "filter_say_hello").make_runtime()
         assert rt.invoke("test.wasm", 0.0, '{"key":"val"}') == '{"key":"val"}'
         assert rt.errors == 0
 
-    def test_append_tag_golden(self):
+    def test_append_tag_golden(self, load_wasm):
         # flb_test_append_tag asserts "tag":"test.wasm" in the output
-        rt = _load("append_tag.wasm", "filter_append_tag").make_runtime()
+        rt = load_wasm("append_tag.wasm", "filter_append_tag").make_runtime()
         out = rt.invoke("test.wasm", 0.0, '{"key":"val"}')
         assert out is not None and '"tag":"test.wasm"' in out
 
-    def test_numeric_records_golden(self):
+    def test_numeric_records_golden(self, load_wasm):
         # flb_test_numerics_records: ints must serialize WITHOUT a
         # fraction, floats with — the C test greps both polarities
-        rt = _load(
+        rt = load_wasm(
             "numeric_records.wasm", "filter_numeric_records"
         ).make_runtime()
         out = rt.invoke("test.wasm", 1234.0, '{"key":"val"}')
@@ -440,23 +446,23 @@ class TestReferenceBinaries:
         assert '"wasm_truncate_float":120' in out
         assert '"wasm_truncate_float":120.' not in out
 
-    def test_array_contains_null_golden(self):
+    def test_array_contains_null_golden(self, load_wasm):
         # flb_test_array_contains_null: modify_record.wasm must keep
         # [1,null,"world"] intact and add "modify":"yes"
-        rt = _load("modify_record.wasm", "filter_modify_record").make_runtime()
+        rt = load_wasm("modify_record.wasm", "filter_modify_record").make_runtime()
         out = rt.invoke("test.wasm", 0.0, '{"hello": [1, null, "world"]}')
         assert out is not None
         assert '[1,null,"world"]' in out and '"modify":"yes"' in out
 
-    def test_drop_all_records_golden(self):
+    def test_drop_all_records_golden(self, load_wasm):
         # flb_test_drop_all_records: drop_record.wasm returns NULL
-        rt = _load("drop_record.wasm", "filter_drop_record").make_runtime()
+        rt = load_wasm("drop_record.wasm", "filter_drop_record").make_runtime()
         assert rt.invoke("test.wasm", 0.0, '{"key":"val"}') is None
 
-    def test_append_kv_on_msgpack_golden(self):
+    def test_append_kv_on_msgpack_golden(self, load_wasm):
         # flb_test_append_kv_on_msgpack: event_format msgpack, the Rust
         # binary appends platform=wasm to the msgpack map
-        rt = _load(
+        rt = load_wasm(
             "msgpack/filter_rust_mp.wasm",
             "rust_filter_mp",
             event_format="msgpack",
@@ -466,10 +472,10 @@ class TestReferenceBinaries:
         rec = json.loads(out)
         assert rec["platform"] == "wasm" and rec["key"] == "val"
 
-    def test_state_persists_within_instance(self):
+    def test_state_persists_within_instance(self, load_wasm):
         # same instance across records (one per chunk/partition): the
         # libc allocator inside the binary must survive repeated calls
-        rt = _load("append_tag.wasm", "filter_append_tag").make_runtime()
+        rt = load_wasm("append_tag.wasm", "filter_append_tag").make_runtime()
         for i in range(5):
             out = rt.invoke("t", float(i), json.dumps({"n": i}))
             assert out is not None and f'"n":{i}' in out

@@ -152,10 +152,11 @@ def test_s3_key_template():
     assert key == "c"
 
 
-def test_s3_key_col_matches_python(spark):
+def test_s3_key_col_matches_python(spark, monkeypatch):
     """Columnar s3_key_col vs the driver-side s3_key twin across the
     token/strftime/missing-part matrix (flb_aws_util.c:814-1010)."""
     import datetime as dt
+    import time
 
     from pyspark.sql import functions as F
 
@@ -184,3 +185,15 @@ def test_s3_key_col_matches_python(spark):
     assert df1.select(s3_key_col(
         "a%%b%Q/$TAG", F.col("ts"), F.col("tag")).alias("k")
     ).first()["k"] == "a%b%Q/app.web.prod"
+    # %s is epoch seconds; the twin's strftime derives it with mktime
+    # in the local zone, so the two agree under UTC
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    try:
+        got = [r["k"] for r in df.select(s3_key_col(
+            "t/%s/$TAG", F.col("ts"), F.col("tag")).alias("k")).collect()]
+        want = [s3_key("t/%s/$TAG", ep, t) for t, ep, _, _ in cases]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert got == want == [f"t/{ep}/{t}" for t, ep, _, _ in cases]
