@@ -25,7 +25,8 @@ is visible. Env knobs:
     BENCH_REPS           reps per query (default 3, best-of)
     BENCH_PIPELINE_REPS  reps of the synthetic pipeline (default 2)
     BENCH_SINK_DIR       where the pipeline sink write lands (default:
-                         /dev/shm if it has >16G free, else $TMPDIR)
+                         /dev/shm if it has a quarter of the host's
+                         memory free, else $TMPDIR)
 
 Disk-noise robustness: this sandbox's single virtio disk throttles
 intermittently and severely — the identical pipeline rep measured
@@ -139,12 +140,20 @@ def _cpu_ticks() -> tuple[int, int]:
         return 0, 0
 
 
-def _tmpfs_base(min_free_gb: int = 16) -> str | None:
-    """/dev/shm if present with headroom, else None (use $TMPDIR)."""
+def _driver_memory(host_bytes: int) -> str:
+    """Half the host's memory, between 1g and 32g: in local mode the
+    driver heap also hosts the executors' tasks, and tmpfs and the OS
+    need the rest."""
+    return f"{max(1, min(32, host_bytes // 2 // (1 << 30)))}g"
+
+
+def _tmpfs_base(min_free: int) -> str | None:
+    """/dev/shm if present with ``min_free`` bytes free, else None (use
+    $TMPDIR)."""
     base = "/dev/shm"
     try:
         st = os.statvfs(base)
-        if st.f_bavail * st.f_frsize >= min_free_gb * (1 << 30):
+        if st.f_bavail * st.f_frsize >= min_free:
             return base
     except OSError:
         pass
@@ -152,22 +161,23 @@ def _tmpfs_base(min_free_gb: int = 16) -> str | None:
 
 
 def main() -> None:
-    # 32 concurrent tasks are GC-bound in the 8g default heap; size
-    # like a real executor (set before the JVM starts)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
+    # tmpfs pages come out of the same memory as the heap: the heap
+    # takes half of it and the sink write and shuffle may take a
+    # quarter (both set before the JVM starts)
+    host_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", _driver_memory(host_bytes))
+    tmpfs_min_free = host_bytes // 4
     # shuffle/spill on tmpfs for the same reason as the sink write
-    # (see module docstring) — must be set before the JVM starts
-    tmpfs = _tmpfs_base()
+    # (see module docstring)
+    tmpfs = _tmpfs_base(tmpfs_min_free)
     if tmpfs and "SPARK_LOCAL_DIRS" not in os.environ:
         local_dir = os.path.join(tmpfs, "fbs_bench_local")
         os.makedirs(local_dir, exist_ok=True)
         os.environ["SPARK_LOCAL_DIRS"] = local_dir
 
     import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-
     from fluent_bit_spark.datagen import generate_pages
-    from fluent_bit_spark.pipeline import build_pipeline
+    from fluent_bit_spark.pipeline import build_pipeline, run_to_sinks
     from fluent_bit_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -191,10 +201,11 @@ def main() -> None:
     force(qs["token_count"](spark, sf_dir))
     release_all()
 
-    # flagship synthetic pipeline throughput: ONE pass writes routed
-    # sink partitions (the delivery), then aggregates roll up from the
-    # written columnar output — the production shape at 100 TB (never
-    # recompute the parse for the rollup)
+    # flagship synthetic pipeline throughput through run_to_sinks: ONE
+    # pass writes routed sink partitions (the delivery), then
+    # aggregates roll up from the written columnar output — the
+    # production shape at 100 TB (never recompute the parse for the
+    # rollup)
     n_rows = int(os.environ.get("BENCH_PAGES_ROWS", "2000000"))
     # BENCH_SINK=parquet (default): full delivery — partitioned sink
     # write + rollup from the written files (production shape; on one
@@ -219,14 +230,11 @@ def main() -> None:
         warm = build_pipeline(generate_pages(spark, 100_000), from_html=True)
         if sink_mode == "noop":
             force(warm.routed.drop("html"))
+            force(warm.aggregates)
         else:
             warm_dir = tempfile.mkdtemp(prefix="fbs_bench_warm_", dir=sink_base)
-            warm.routed.drop("html").write.mode("overwrite").partitionBy(
-                "sink"
-            ).parquet(warm_dir)
-            force(spark.read.parquet(warm_dir))
+            run_to_sinks(warm, warm_dir)
             shutil.rmtree(warm_dir, ignore_errors=True)
-        force(warm.aggregates)
 
     pages = generate_pages(spark, n_rows)
     pipe_times: list[float] = []
@@ -241,17 +249,7 @@ def main() -> None:
             force(result.aggregates)
         else:
             sink_dir = tempfile.mkdtemp(prefix="fbs_bench_sinks_", dir=sink_base)
-            result.routed.drop("html").write.mode("overwrite").partitionBy(
-                "sink"
-            ).parquet(sink_dir)
-            routed_out = spark.read.parquet(sink_dir)
-            aggs = routed_out.groupBy(
-                "sink", F.window("warc_ts", "1 minute")["start"].alias("window_start")
-            ).agg(
-                F.count(F.lit(1)).alias("records"),
-                F.sum(F.length("text")).alias("bytes"),
-            )
-            force(aggs)
+            run_to_sinks(result, sink_dir)
             shutil.rmtree(sink_dir, ignore_errors=True)
         pipe_times.append(round(time.perf_counter() - t0, 3))
         tk1, st1 = _cpu_ticks()
@@ -333,6 +331,9 @@ def main() -> None:
             if pipe_times and sink_mode != "noop"
             else None
         ),
+        "host_memory_bytes": host_bytes,
+        "driver_memory": os.environ["SPARK_DRIVER_MEMORY"],
+        "tmpfs_min_free_bytes": tmpfs_min_free,
     }
     line = json.dumps(payload)
     # Trim cheapest-first so the headline numbers (the synthetic

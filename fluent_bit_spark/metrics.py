@@ -10,22 +10,43 @@ Spark design: metrics must not add actions (a .count() per stage would
 re-run the 100 TB scan). ``observe()`` named aggregates ride along the
 job that does the work and are read from its ``Observation`` once that
 action finishes (``classic.run_classic_outputs`` counts each output's
-delivered rows this way).
+delivered rows this way, ``pipeline.run_to_sinks`` its per-sink
+records, parse failures and bytes).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
 def observe_stage(df: DataFrame, stage: str, parse_ok_col: str | None = None,
-                  bytes_col: str | None = None) -> tuple[DataFrame, Observation]:
-    """Attach zero-cost observed metrics to a stage."""
+                  bytes_col: str | None = None, key_col: str | None = None,
+                  keys: list[str] | None = None) -> tuple[DataFrame, Observation]:
+    """Attach zero-cost observed metrics to a stage.
+
+    The observation holds ``records`` (and ``parse_failures`` /
+    ``bytes`` when their columns are given). With ``key_col``, it holds
+    one struct of those counters per name in ``keys`` instead (the
+    names are known at plan time, e.g. a pipeline's sinks), each
+    counting only the rows whose ``key_col`` equals that name.
+    """
+    def counters(hit: Column) -> list[Column]:
+        cols = [F.count(F.when(hit, 1)).alias("records")]
+        if parse_ok_col:
+            cols.append(F.coalesce(
+                F.sum(F.when(hit, (~F.col(parse_ok_col)).cast("long"))), F.lit(0)
+            ).alias("parse_failures"))
+        if bytes_col:
+            cols.append(F.coalesce(
+                F.sum(F.when(hit, F.length(F.col(bytes_col)).cast("long"))), F.lit(0)
+            ).alias("bytes"))
+        return cols
+
     obs = Observation(stage)
-    cols = [F.count(F.lit(1)).alias("records")]
-    if parse_ok_col:
-        cols.append(F.sum((~F.col(parse_ok_col)).cast("long")).alias("parse_failures"))
-    if bytes_col:
-        cols.append(F.sum(F.length(F.col(bytes_col)).cast("long")).alias("bytes"))
-    return df.observe(obs, *cols), obs
+    if key_col is None:
+        return df.observe(obs, *counters(F.lit(True))), obs
+    per_key = [
+        F.struct(*counters(F.col(key_col) == k)).alias(k) for k in keys or []
+    ]
+    return df.observe(obs, *per_key), obs

@@ -14,13 +14,17 @@ Scale design (10^12 rows):
   (logfmt) receives a pre-masked column (null for non-logfmt rows) so
   the Arrow batch work is proportional to logfmt rows only.
 - enrich: broadcast joins only (see enrich.py).
-- fan-out: single-pass exploded write partitioned by sink — the scan
-  runs ONCE regardless of sink count; sink predicates are
-  constant-folded literals.
-- aggregates: groupBy partials combine map-side; the only full
-  shuffle in the job is keyed on (sink, window, domain).
-- skew: hot domains are salted via pmod(xxhash64(url), N) appended to
-  the repartition key; AQE skew-join handles the enrich side.
+- one scan per run: ``run_to_sinks`` reads the input once, in a single
+  exploded write partitioned by sink — sink predicates are
+  constant-folded literals, so the scan runs ONCE regardless of sink
+  count.
+- counters from the write: per-sink records / parse failures / bytes
+  are an ``Observation`` on that write (``metrics.observe_stage``), the
+  in-plan analog of fluent-bit's per-plugin counters; they give the
+  returned counts and the ``metrics`` table without another action.
+- aggregates: ``rollup`` reads the written sink files, never the
+  input, so the parse is paid once; its groupBy partials combine
+  map-side and the only shuffle is keyed on (sink, window).
 - resume: deterministic batch column + dynamic partition overwrite
   makes every batch write idempotent; a progress table records
   completed batches (the in_tail SQLite offset table analog,
@@ -34,10 +38,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from fluent_bit_spark.datagen import format_of
 from fluent_bit_spark.enrich import checklist, lookup_join
 from fluent_bit_spark.functions.timeparse import time_parse_col
+from fluent_bit_spark.metrics import observe_stage
 from fluent_bit_spark.parsers.compile import logfmt_map_fast_col, ltsv_map_col
 from fluent_bit_spark.router import Route, RewriteTagRule, apply_rewrite_tag, fan_out_exploded
 
@@ -191,7 +197,31 @@ DEFAULT_REWRITES = [
 class PipelineResult:
     routed: DataFrame
     aggregates: DataFrame
-    metrics: DataFrame
+    # every sink a row can be routed to, from the routes at plan time
+    sinks: list[str]
+    agg_window: str
+
+
+def rollup(routed: DataFrame, agg_window: str = "1 minute") -> DataFrame:
+    """out_flowcounter per sink: records, bytes and parse failures per
+    ``agg_window`` of ``warc_ts``. Works on any frame with the routed
+    columns: the lazy plan, the written sink files, or a watermarked
+    stream."""
+    return (
+        routed.groupBy(
+            F.col("sink"),
+            F.window(F.col("warc_ts"), agg_window).alias("w"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("records"),
+            F.sum(F.length("text")).alias("bytes"),
+            F.sum((~F.col("_parse_ok")).cast("long")).alias("parse_failures"),
+        )
+        .select(
+            "sink", F.col("w.start").alias("window_start"), "records", "bytes",
+            "parse_failures",
+        )
+    )
 
 
 def build_pipeline(
@@ -228,69 +258,70 @@ def build_pipeline(
     if watchlist:
         enriched = checklist(enriched, watchlist, "domain", {"flagged": "true"})
 
+    routes = routes or DEFAULT_ROUTES
     rewritten = apply_rewrite_tag(enriched, rewrites if rewrites is not None else DEFAULT_REWRITES)
-    routed = fan_out_exploded(rewritten, routes or DEFAULT_ROUTES)
-
-    # out_flowcounter per sink: records + bytes per unit time
-    aggregates = (
-        routed.groupBy(
-            F.col("sink"),
-            F.window(F.col("warc_ts"), agg_window).alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("records"),
-            F.sum(F.length("text")).alias("bytes"),
-            F.sum((~F.col("_parse_ok")).cast("long")).alias("parse_failures"),
-        )
-        .select(
-            "sink", F.col("w.start").alias("window_start"), "records", "bytes",
-            "parse_failures",
-        )
+    routed = fan_out_exploded(rewritten, routes)
+    return PipelineResult(
+        routed=routed,
+        aggregates=rollup(routed, agg_window),
+        sinks=list(dict.fromkeys(r.sink for r in routes)),
+        agg_window=agg_window,
     )
-
-    metrics = (
-        routed.groupBy("sink", F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("records_out"),
-            F.sum((~F.col("_parse_ok")).cast("long")).alias("parse_failures"),
-            F.sum(F.length("text")).alias("bytes"),
-        )
-        .withColumn("stage", F.lit("route"))
-    )
-    return PipelineResult(routed=routed, aggregates=aggregates, metrics=metrics)
 
 
 def run_to_sinks(
     result: PipelineResult, out_dir: str, fmt: str = "parquet"
 ) -> dict[str, int]:
-    """Materialize: one-pass partitioned write + aggregate/metrics
-    tables. ``fmt`` is any Spark batch format — locally "parquet";
-    on a cluster with the Iceberg runtime on the classpath, pass
-    "iceberg" (or swap to ``writeTo(table)`` with a catalog) and the
-    plan is unchanged: Iceberg's SparkWrite consumes the same
-    partitioned one-pass write."""
-    (
-        result.routed.write.mode("overwrite")
-        .format(fmt)
-        .partitionBy("sink")
-        .save(os.path.join(out_dir, "sinks"))
-    )
-    result.aggregates.write.mode("overwrite").format(fmt).save(
-        os.path.join(out_dir, "aggregates")
-    )
-    result.metrics.write.mode("overwrite").format(fmt).save(
-        os.path.join(out_dir, "metrics")
-    )
+    """Materialize under ``out_dir`` with ONE scan of the input.
+
+    - ``sinks``: the routed rows, one write partitioned by ``sink``;
+    - ``aggregates``: ``rollup`` of the written sink files;
+    - ``metrics``: one row per sink that received rows (``stage``,
+      ``sink``, ``records_out``, ``parse_failures``, ``bytes``), built
+      from an ``Observation`` on the sink write.
+
+    Returns rows per sink from the same observation; a sink that
+    received no rows is absent. ``fmt`` is any Spark file format
+    that accepts a read schema (parquet, orc, json, ...).
+    """
     spark = result.routed.sparkSession
-    counts = {
-        r["sink"]: r["cnt"]
-        for r in spark.read.format(fmt)
-        .load(os.path.join(out_dir, "sinks"))
-        .groupBy("sink")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    return counts
+    sinks_dir = os.path.join(out_dir, "sinks")
+    routed, obs = observe_stage(
+        result.routed, "route", parse_ok_col="_parse_ok", bytes_col="text",
+        key_col="sink", keys=result.sinks,
+    )
+    routed.write.mode("overwrite").format(fmt).partitionBy("sink").save(sinks_dir)
+    observed = obs.get
+
+    # read back with the written schema: an empty write leaves no file
+    # to infer it from, and the sink column stays a string
+    schema = StructType(
+        [f for f in routed.schema if f.name != "sink"] + [routed.schema["sink"]]
+    )
+    (
+        rollup(spark.read.format(fmt).schema(schema).load(sinks_dir), result.agg_window)
+        .write.mode("overwrite").format(fmt).save(os.path.join(out_dir, "aggregates"))
+    )
+
+    # one row per sink, as literals evaluated in the JVM: no Python
+    # worker starts; an empty table keeps its schema
+    rows = [
+        F.struct(
+            F.lit("route").alias("stage"),
+            F.lit(sink).alias("sink"),
+            F.lit(c["records"]).cast("long").alias("records_out"),
+            F.lit(c["parse_failures"]).cast("long").alias("parse_failures"),
+            F.lit(c["bytes"]).cast("long").alias("bytes"),
+        )
+        for sink, c in observed.items()
+    ]
+    (
+        spark.range(1, numPartitions=1)
+        .select(F.inline(F.array(*rows)))
+        .where(F.col("records_out") > 0)
+        .write.mode("overwrite").format(fmt).save(os.path.join(out_dir, "metrics"))
+    )
+    return {s: c["records"] for s, c in observed.items() if c["records"]}
 
 
 # --------------------------------------------------------------- resume
@@ -337,11 +368,12 @@ def run_resumable(
             raise RuntimeError("injected failure for resume test")
         batch = pages.filter(F.col("batch_id") == b)
         result = build_pipeline(batch.drop("batch_id"), **pipeline_kwargs)
-        routed = result.routed.withColumn("batch_id", F.lit(b))
+        routed, obs = observe_stage(
+            result.routed.withColumn("batch_id", F.lit(b)), f"resume.{b}"
+        )
         routed.write.mode("overwrite").partitionBy("batch_id", "sink").parquet(sinks_path)
-        n = spark.read.parquet(sinks_path).filter(F.col("batch_id") == b).count()
         spark.createDataFrame(
-            [(b, n)], "batch_id int, rows_done long"
+            [(b, obs.get["records"])], "batch_id int, rows_done long"
         ).withColumn("completed_at", F.current_timestamp()).write.mode("append").parquet(
             progress_path
         )

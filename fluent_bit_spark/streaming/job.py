@@ -36,6 +36,7 @@ from fluent_bit_spark.pipeline import (
     DEFAULT_REWRITES,
     DEFAULT_ROUTES,
     parse_stage,
+    rollup,
     tag_stage,
 )
 from fluent_bit_spark.router import RewriteTagRule, Route, apply_rewrite_tag, fan_out_exploded
@@ -161,19 +162,7 @@ def start_aggregate_stream(
     """Windowed per-sink aggregates (out_flowcounter shape) with an
     event-time watermark; append-mode parquet of finalized windows."""
     routed = streaming_routed(read_pages_stream(spark, source_dir), routes)
-    aggs = (
-        routed.withWatermark("warc_ts", watermark_delay)
-        .groupBy(F.col("sink"), F.window("warc_ts", window_duration).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("records"),
-            F.sum(F.length("text")).alias("bytes"),
-            F.sum((~F.col("_parse_ok")).cast("long")).alias("parse_failures"),
-        )
-        .select(
-            "sink", F.col("w.start").alias("window_start"), "records", "bytes",
-            "parse_failures",
-        )
-    )
+    aggs = rollup(routed.withWatermark("warc_ts", watermark_delay), window_duration)
     writer = (
         aggs.writeStream.outputMode("append")
         .format("parquet")

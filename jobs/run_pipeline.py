@@ -6,11 +6,14 @@
         jobs/run_pipeline.py \
         --input  <pages table path>   (parquet/iceberg dir) \
         --output <sink root> \
-        [--format parquet|iceberg] [--streaming] [--checkpoint <dir>]
+        [--format parquet|orc] [--streaming] [--checkpoint <dir>]
         [--synthetic-rows N]   (generate instead of reading --input)
 
-Batch mode runs parse -> enrich -> rewrite -> fan-out -> aggregate and
-writes sinks/aggregates/metrics under --output (resumable variant:
+Batch mode runs parse -> enrich -> rewrite -> fan-out -> aggregate,
+reading the input once: it writes the routed rows to sinks/ (partitioned
+by sink), rolls aggregates/ up from those files, and writes metrics/ as
+one row per sink (records_out, parse_failures, bytes) observed from the
+sink write; it prints the rows per sink (resumable variant:
 pipeline.run_resumable). --streaming runs the Structured Streaming
 form with checkpointed resume. On a real cluster nothing changes but
 --master/--num-executors on the spark-submit line — the plan is

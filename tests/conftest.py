@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -36,6 +37,38 @@ def pytest_runtest_setup(item):
         REFERENCE_DIR
     ):
         pytest.skip(f"fluent-bit reference tree not found at {REFERENCE_DIR}")
+
+
+@contextmanager
+def job_group(spark, group: str):
+    """Run the Spark jobs started inside the block under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def sql_executions(spark, group: str) -> list:
+    """SQL executions that ran jobs of ``group``, from Spark's status
+    store (the one the web UI shows; it works with the UI disabled)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    job_ids = {
+        j.jobId() for j in seq(jsc.statusStore().jobsList(None))
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group
+    }
+    store = spark._jsparkSession.sharedState().statusStore()
+    return [
+        e for e in seq(store.executionsList())
+        if {int(k) for k in seq(e.jobs().keys().toSeq())} & job_ids
+    ]
 
 
 @pytest.fixture(scope="session")

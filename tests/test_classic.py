@@ -5,6 +5,7 @@ property names per the reference plugins)."""
 import datetime
 
 import pytest
+from conftest import job_group, sql_executions
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.classic import (
@@ -90,41 +91,16 @@ _TWO_DELIVERING_AND_COUNTER = """
 """
 
 
-def _sql_executions(spark, group: str) -> list:
-    """SQL executions that ran jobs of ``group``, from Spark's status
-    store (the one the web UI shows; it works with the UI disabled)."""
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-
-    def seq(s):
-        return [s.apply(i) for i in range(s.size())]
-
-    job_ids = {
-        j.jobId() for j in seq(jsc.statusStore().jobsList(None))
-        if j.jobGroup().isDefined() and j.jobGroup().get() == group
-    }
-    store = spark._jsparkSession.sharedState().statusStore()
-    return [
-        e for e in seq(store.executionsList())
-        if {int(k) for k in seq(e.jobs().keys().toSeq())} & job_ids
-    ]
-
-
 def test_delivering_outputs_scan_once(spark, tmp_path):
     """One write per delivering output and one count for the counter:
     the delivered counts come from the writes, not a second scan."""
     conf = _TWO_DELIVERING_AND_COUNTER % ""
     pipe = build_classic_pipeline(spark, conf)
-    sc = spark.sparkContext
     group = f"classic-scan-once-{id(pipe)}"
-    sc.setJobGroup(group, group)
-    try:
+    with job_group(spark, group):
         counts = run_classic_outputs(pipe, str(tmp_path))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     assert counts == {"file.0": 4, "loki.1": 4, "counter.2": 1}
-    assert len(_sql_executions(spark, group)) == 3
+    assert len(sql_executions(spark, group)) == 3
 
 
 def test_dropped_output_reports_zero(spark, tmp_path, monkeypatch):

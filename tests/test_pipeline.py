@@ -5,6 +5,7 @@ plus datagen determinism and resume-from-progress."""
 import shutil
 
 import pytest
+from conftest import job_group, sql_executions
 from pyspark.sql import functions as F
 
 from fluent_bit_spark import oracle
@@ -17,6 +18,7 @@ from fluent_bit_spark.pipeline import (
     run_resumable,
     run_to_sinks,
 )
+from fluent_bit_spark.router import Route
 
 N = 500
 
@@ -149,6 +151,63 @@ def test_aggregates_consistent(spark, pages, tmp_path):
     assert sums == counts
 
 
+def test_run_to_sinks_scans_input_once(spark, pages, tmp_path):
+    """One SQL execution reads the input; counts, the metrics table and
+    the aggregates (rolled up from the written sinks) all agree, and a
+    sink no row reaches is absent from each of them."""
+    inp = str(tmp_path / "pages_in")
+    pages.write.parquet(inp)
+    routes = DEFAULT_ROUTES + [Route("sink_none", "nomatch.*")]
+    result = build_pipeline(spark.read.parquet(inp), routes=routes)
+    out = tmp_path / "out"
+    group = f"pipeline-scan-once-{id(result)}"
+    with job_group(spark, group):
+        counts = run_to_sinks(result, str(out))
+    reads = [
+        e for e in sql_executions(spark, group)
+        if "pages_in" in e.physicalPlanDescription()
+    ]
+    assert len(reads) == 1
+
+    metrics = spark.read.parquet(str(out / "metrics"))
+    assert metrics.columns == [
+        "stage", "sink", "records_out", "parse_failures", "bytes",
+    ]
+    per_sink = {r["sink"]: r["records_out"] for r in metrics.collect()}
+    aggs = spark.read.parquet(str(out / "aggregates"))
+    sums = {
+        r["sink"]: r["s"]
+        for r in aggs.groupBy("sink").agg(F.sum("records").alias("s")).collect()
+    }
+    assert counts == per_sink == sums
+    assert set(counts) == {"sink_all", "sink_en", "sink_com", "sink_errors"}
+
+    # the observed bytes and parse failures equal the lazy plan's rollup
+    want = {
+        r["sink"]: (r["b"], r["f"])
+        for r in result.aggregates.groupBy("sink")
+        .agg(F.sum("bytes").alias("b"), F.sum("parse_failures").alias("f"))
+        .collect()
+    }
+    got = {
+        r["sink"]: (r["bytes"], r["parse_failures"]) for r in metrics.collect()
+    }
+    assert got == want
+
+
+def test_run_to_sinks_no_route_matches(spark, pages, tmp_path):
+    result = build_pipeline(pages, routes=[Route("sink_none", "nomatch.*")])
+    out = tmp_path / "out"
+    assert run_to_sinks(result, str(out)) == {}
+    metrics = spark.read.parquet(str(out / "metrics"))
+    assert metrics.count() == 0
+    assert metrics.dtypes == [
+        ("stage", "string"), ("sink", "string"), ("records_out", "bigint"),
+        ("parse_failures", "bigint"), ("bytes", "bigint"),
+    ]
+    assert spark.read.parquet(str(out / "aggregates")).count() == 0
+
+
 def test_resume_no_duplicates(spark, pages, tmp_path):
     out = str(tmp_path / "resume")
     # first run crashes after 3 batches
@@ -170,6 +229,9 @@ def test_resume_no_duplicates(spark, pages, tmp_path):
     # full coverage equal to a clean one-shot run
     clean = build_pipeline(pages).routed
     assert sinks.count() == clean.count()
+    # rows_done is observed from each batch write
+    progress = spark.read.parquet(out + "/progress")
+    assert progress.agg(F.sum("rows_done")).first()[0] == sinks.count()
 
 
 def test_from_html_extraction_byte_identical(spark, pages):
