@@ -11,8 +11,8 @@ Supported plugin surface (the SURVEY §2 in-scope set):
 
 - inputs: dummy (Dummy/Samples/Tag), tail (Path/Tag/Parser/Path_Key/
   multiline.parser java|go|python|ruby|cri|docker — lines join per
-  file before the parser stage, the in_tail ml order;
-  batch form reads the files, streaming handled by streaming/job.py),
+  file before the parser stage, the in_tail ml order; batch form
+  reads the files, start_classic_stream follows them),
   lib (caller-supplied DataFrame — the in_lib embedding analog, also
   the test harness hook)
 - filters: grep, parser (Key_Name/Parser/Reserve_Data/Preserve_Key),
@@ -375,7 +375,8 @@ def _expand_map(
     (logfmt/ltsv/json) can't know their keys at compile time; classic-
     mode filters address keys as columns, so the key set is inferred
     from a bounded sample (warned: a construction-time Spark job per
-    config line — declare keys at scale), with the same caveat as
+    config line, per micro-batch in start_classic_stream — declare
+    keys at scale), with the same caveat as
     spark.read.json inference (keys absent from the sample are
     dropped). Undeclared key order is sorted for a deterministic
     schema; declared order is preserved.
@@ -403,11 +404,20 @@ def _expand_map(
     return df.select(*cols)
 
 
+def _tail_paths(sec: Section) -> list[str]:
+    """in_tail's Path: a comma-separated glob list (tail_scan.c)."""
+    paths = [p.strip() for p in (sec.get("path") or "").split(",") if p.strip()]
+    if not paths:
+        raise ValueError("[INPUT] tail requires Path")
+    return paths
+
+
 def _input_df(
     spark: SparkSession,
     sec: Section,
     parsers: dict[str, ParserSpec],
     lib_inputs: dict[str, DataFrame],
+    lines: DataFrame | None = None,
 ) -> DataFrame:
     name = sec.name
     tag = sec.get("tag") or name
@@ -475,12 +485,11 @@ def _input_df(
                 cols.append(raw.alias(k))
         return base.select(*cols)
     if name == "tail":
-        path = sec.get("path")
-        if not path:
-            raise ValueError("[INPUT] tail requires Path")
-        # Path accepts a comma-separated glob list (tail_scan.c)
-        paths = [p.strip() for p in path.split(",") if p.strip()]
-        df = spark.read.text(paths).withColumnRenamed("value", "log")
+        # ``lines`` (a ``value`` column) stands in for the files' lines:
+        # start_classic_stream hands over each micro-batch's
+        if lines is None:
+            lines = spark.read.text(_tail_paths(sec))
+        df = lines.withColumnRenamed("value", "log")
         # Exclude_Path: comma-separated globs dropped from the set
         # (in_tail fnmatch semantics: '*' crosses separators)
         excl = sec.get("exclude_path")
@@ -1227,9 +1236,17 @@ def build_classic_pipeline(
     conf_text: str,
     parsers: dict[str, ParserSpec] | None = None,
     lib_inputs: dict[str, DataFrame] | None = None,
+    lines: DataFrame | None = None,
 ) -> ClassicPipeline:
-    # accepts raw classic text or pre-parsed sections (load_classic_conf
-    # output — the @INCLUDE/yaml path)
+    """Assemble a config (raw classic text, or the sections
+    ``load_classic_conf`` returns for the @INCLUDE/yaml path) into its
+    filtered records and routed outputs.
+
+    ``lines``, when given, replaces the files the tail inputs read: a
+    ``value`` column of raw lines plus ``input``, the position of each
+    line's tail among the [INPUT] sections. ``start_classic_stream``
+    passes each micro-batch this way.
+    """
     sections = (
         conf_text if isinstance(conf_text, list) else parse_classic_conf(conf_text)
     )
@@ -1249,8 +1266,15 @@ def build_classic_pipeline(
     if not inputs:
         raise ValueError("config has no [INPUT] section")
     dfs = [
-        _apply_processors(_input_df(spark, s, parsers, lib_inputs), s, parsers)
-        for s in inputs
+        _apply_processors(
+            _input_df(
+                spark, s, parsers, lib_inputs,
+                None if lines is None
+                else lines.filter(F.col("input") == i).select("value"),
+            ),
+            s, parsers,
+        )
+        for i, s in enumerate(inputs)
     ]
     df = dfs[0]
     for d in dfs[1:]:
@@ -1334,134 +1358,81 @@ def start_classic_stream(
 ):
     """Streaming classic mode: tail inputs FOLLOW their paths.
 
-    [INPUT] tail becomes readStream.text over Path (new files per
-    micro-batch — in_tail's directory following with the checkpoint as
-    the offset database, tail_sql.h analog); filters apply unchanged
-    (they are pure plan builders); every output delivers via
-    foreachBatch into parquet under ``out_dir/<output id>`` partitioned
-    by tag, idempotent per batch_id. [SERVICE] Flush N maps to a
-    processingTime trigger of N seconds when ``available_now`` is off.
+    Only the raw tail lines stream: one ``readStream.text`` per Path
+    entry (new files per micro-batch — in_tail's directory following
+    with the checkpoint as the offset database, the tail_sql.h
+    analog), each line tagged with its [INPUT]'s position. Every
+    micro-batch then runs the batch engine over its lines:
+    ``build_classic_pipeline`` and ``run_classic_outputs`` into
+    ``out_dir/batch_id=<n>/<output id>``, so parsers, filters, stream
+    tasks, routing, encodings and Retry_Limit are the batch ones, and
+    a replayed batch rewrites its own directory. Parser keys without a
+    ``Keys`` declaration are inferred per micro-batch. [SERVICE] Flush
+    N maps to a processingTime trigger of N seconds when
+    ``available_now`` is off.
 
-    Streaming-unsupported pieces raise: dummy/lib inputs (batch
-    generators), throttle (global row_number is not incremental —
-    use streaming/job watermarked aggregation instead).
+    Pieces whose state would span micro-batches raise at start:
+    non-tail inputs, multiline.parser, throttle, and windowed
+    [STREAM_TASK]s.
     """
     import os
+    from functools import reduce
+
+    from fluent_bit_spark.sp.parser import parse_sql
 
     sections = (
         conf_text if isinstance(conf_text, list) else parse_classic_conf(conf_text)
     )
-    parsers = {**parsers_from_sections(sections), **(parsers or {})}
+    streams = []
+    for i, sec in enumerate(s for s in sections if s.kind == "input"):
+        if sec.name != "tail":
+            raise ValueError(
+                f"streaming classic mode supports tail inputs only, got {sec.name!r}"
+            )
+        if sec.get("multiline.parser"):
+            raise ValueError(
+                "streaming classic tail does not support multiline.parser "
+                "(a record may span micro-batches); use "
+                "streaming/multiline.streaming_multiline with an explicit "
+                "sequence column, or the batch classic mode"
+            )
+        streams += [
+            spark.readStream.option("recursiveFileLookup", "true")
+            .text(path)
+            .select(F.lit(i).alias("input"), "value")
+            for path in _tail_paths(sec)
+        ]
+    if not streams:
+        raise ValueError("config has no [INPUT] section")
 
     flush_sec = 1
     for s in sections:
         if s.kind == "service" and s.get("flush"):
             flush_sec = int(float(s.get("flush")))
-
-    dfs = []
-    for sec in (s for s in sections if s.kind == "input"):
-        if sec.name != "tail":
+        if (s.kind == "filter" and s.name == "throttle") or any(
+            p.name == "throttle" for p in s.processors
+        ):
             raise ValueError(
-                f"streaming classic mode supports tail inputs only, got {sec.name!r}"
-            )
-        path = sec.get("path")
-        tag = sec.get("tag") or "tail.0"
-        if sec.get("multiline.parser"):
-            raise ValueError(
-                "streaming classic tail does not support multiline.parser "
-                "(a text file stream has no stable per-line order key); "
-                "use streaming/multiline.streaming_multiline with an "
-                "explicit sequence column, or the batch classic mode"
-            )
-        stream = (
-            spark.readStream.format("text")
-            .option("recursiveFileLookup", "true")
-            .load(path)
-            .withColumnRenamed("value", "log")
-            .withColumn("tag", F.lit(tag))
-        )
-        pname = sec.get("parser")
-        if pname:
-            spec = parsers[pname]
-            parsed = apply_parser(stream, "log", spec)
-            if "record_map" in parsed.columns:
-                keys = spec.declared_keys()
-                if keys is None:
-                    # no Keys declaration: key inference needs a
-                    # bounded batch sample of the same path (a stream
-                    # can't be collected) — one extra batch read per
-                    # undeclared parser; declare Keys to skip it
-                    import warnings
-
-                    warnings.warn(
-                        f"streaming classic: sampling batch read of "
-                        f"{path!r} to infer parser {pname!r} keys; "
-                        "declare 'Keys k1 k2 ...' in the [PARSER] "
-                        "spec to avoid it",
-                        stacklevel=2,
-                    )
-                    batch = apply_parser(
-                        spark.read.text(path).withColumnRenamed("value", "log"),
-                        "log",
-                        spec,
-                    )
-                    keys = sorted(
-                        r[0]
-                        for r in batch.limit(10_000)
-                        .select(
-                            F.explode(F.map_keys(F.col("record_map"))).alias("k")
-                        )
-                        .distinct()
-                        .collect()
-                    )
-                cols = [F.col(c) for c in parsed.columns if c != "record_map"]
-                cols += [F.col("record_map").getItem(k).alias(k) for k in keys]
-                parsed = parsed.select(*cols)
-            stream = parsed
-        # yaml per-input processors work on streams too (all dispatch
-        # targets are projections/filters — no aggregation)
-        stream = _apply_processors(stream, sec, parsers)
-        dfs.append(stream)
-    if not dfs:
-        raise ValueError("config has no [INPUT] section")
-    df = dfs[0]
-    for d in dfs[1:]:
-        df = df.unionByName(d, allowMissingColumns=True)
-
-    for s in (s for s in sections if s.kind == "filter"):
-        if s.name == "throttle":
-            raise ValueError(
-                "filter throttle is batch-only in classic mode; use "
+                "throttle is batch-only in classic mode; use "
                 "streaming/job.py watermarked aggregation"
             )
-        df = _apply_filter(df, s, parsers)
-
-    out_specs = [
-        (f"{s.name}.{i}", s)
-        for i, s in enumerate(s for s in sections if s.kind == "output")
-    ]
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for oid, sec in out_specs:
-                routed = batch_df.filter(tag_match_col("tag", sec.get("match", "*")))
-                if sec.name in ("null", "stdout"):
-                    continue
-                if sec.name == "counter":
-                    routed = routed.agg(F.count(F.lit(1)).alias("count"))
-                (
-                    routed.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(os.path.join(out_dir, oid))
+        if s.kind in ("stream_task", "stream_processor") and s.get("exec"):
+            if parse_sql(s.get("exec")).window is not None:
+                raise ValueError(
+                    f"windowed stream task {s.get('name')!r} is batch-only "
+                    "in classic mode"
                 )
-        finally:
-            batch_df.unpersist()
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    def write_batch(lines: DataFrame, batch_id: int) -> None:
+        # not persisted: input_file_name() reads '' over a cached
+        # relation, which Exclude_Path, Tag_Regex and Path_Key need
+        pipe = build_classic_pipeline(spark, sections, parsers, lines=lines)
+        run_classic_outputs(pipe, os.path.join(out_dir, f"batch_id={batch_id}"))
+
+    writer = (
+        reduce(DataFrame.union, streams)
+        .writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

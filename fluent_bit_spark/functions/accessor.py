@@ -122,19 +122,3 @@ def ra_col_safe(df: DataFrame, path: str, tag_col: str = "tag") -> Column:
     if not path.strip().startswith("$TAG") and name not in df.columns:
         return F.lit(None).cast("string")
     return ra_col(path, tag_col)
-
-
-def ra_exists(df: DataFrame, path: str) -> Column:
-    """``@record.contains(key)`` semantics: key presence.
-
-    With a fixed schema, presence == non-null for columns that exist and
-    literal False for columns that don't (flb_sp.c:1110-1118 reduces
-    map values to "exists").
-    """
-    try:
-        name = path.lstrip("$").split("[")[0]
-        if name not in df.columns:
-            return F.lit(False)
-        return ra_col(path).isNotNull()
-    except ValueError:
-        return F.lit(False)

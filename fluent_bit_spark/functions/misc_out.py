@@ -43,6 +43,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fluent_bit_spark.sinks import _mp_print
+
 _KEEP_NULLS = {"ignoreNullFields": "false"}
 
 
@@ -118,19 +120,6 @@ def logdna_payload(lines: list[str]) -> str:
 
 # --------------------------------------------------------------- slack
 
-def _mp_print(col: Column, dtype: T.DataType) -> Column:
-    """msgpack_object_print rendering of one value."""
-    if isinstance(dtype, T.StringType):
-        quoted = F.concat(F.lit('"'), col, F.lit('"'))
-    elif isinstance(dtype, T.BooleanType):
-        quoted = F.when(col, F.lit("true")).otherwise(F.lit("false"))
-    elif isinstance(dtype, (T.DoubleType, T.FloatType)):
-        quoted = F.format_string("%f", col)  # msgpack-c prints %f
-    else:
-        quoted = col.cast("string")
-    return F.coalesce(quoted, F.lit("nil"))
-
-
 def to_slack_line(df: DataFrame, ts_col: str, tag_col: str = "tag") -> Column:
     """``["timestamp": <sec>.<9-nanos>, {"k"=>v, ...}]`` — slack.c
     prints the record with msgpack_object_print_buffer."""
@@ -141,9 +130,7 @@ def to_slack_line(df: DataFrame, ts_col: str, tag_col: str = "tag") -> Column:
         (us % 1_000_000) * 1000)
     inner: list[Column] = []
     for c in _record_cols(df, (ts_col, tag_col)):
-        inner.append(F.concat(
-            F.lit(f'"{c}"=>'),
-            _mp_print(df[c], df.schema[c].dataType)))
+        inner.append(F.concat(F.lit(f'"{c}"=>'), _mp_print(df, c)))
     body = F.concat_ws(", ", *inner) if inner else F.lit("")
     return F.concat(head, F.lit("{"), body, F.lit("}"), F.lit("]"))
 

@@ -208,12 +208,3 @@ def xxh3_64(data: bytes) -> int:
     if n <= 240:
         return _len_129to240(data, n)
     return _hash_long(data, n)
-
-
-def cmt_metric_hash(fqname: str, label_values: list) -> int:
-    """cmt_map.c:199-216 — XXH3 over fqname then each label value,
-    NULL values hashed as the literal "_NULL_"."""
-    buf = fqname.encode()
-    for v in label_values:
-        buf += b"_NULL_" if v is None else str(v).encode()
-    return xxh3_64(buf)

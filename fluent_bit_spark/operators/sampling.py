@@ -1,8 +1,7 @@
-"""processor_sampling: probabilistic and condition-gated sampling.
+"""processor_sampling: probabilistic sampling.
 
-Reference: /root/reference/plugins/processor_sampling/
-sampling_probabilistic.c:45-137 (percentage keep), sampling_conditions.c
-(condition-based keep for tail sampling).
+Reference: plugins/processor_sampling/sampling_probabilistic.c:45-137
+(percentage keep).
 
 Spark-first: deterministic per-row hash sampling instead of an RNG —
 ``pmod(xxhash64(cols), 100) < pct`` keeps results reproducible across
@@ -15,8 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from fluent_bit_spark.operators.conditions import ConditionRule, compile_condition
 
 
 def sample_probabilistic(
@@ -33,21 +30,3 @@ def sample_probabilistic(
     cols = [F.col(c) for c in (key_cols or df.columns)]
     bucket = F.pmod(F.xxhash64(F.lit(seed), *cols), F.lit(10000))
     return df.filter(bucket < int(percentage * 100))
-
-
-def sample_conditional(
-    df: DataFrame,
-    keep_conditions: list[ConditionRule],
-    combine: str = "or",
-    baseline_percentage: float = 0.0,
-    key_cols: list[str] | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Tail-sampling shape: always keep rows matching any condition
-    (errors, slow traces), plus a baseline percentage of the rest."""
-    cond = compile_condition(keep_conditions, combine)
-    if baseline_percentage <= 0:
-        return df.filter(cond)
-    cols = [F.col(c) for c in (key_cols or df.columns)]
-    bucket = F.pmod(F.xxhash64(F.lit(seed), *cols), F.lit(10000))
-    return df.filter(cond | (bucket < int(baseline_percentage * 100)))

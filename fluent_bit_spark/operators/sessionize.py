@@ -48,41 +48,3 @@ def sessionize(
         F.col("_w.end").alias("session_end"),
         *agg_cols,
     )
-
-
-def duck_sessionize_sql(
-    table: str,
-    key: str,
-    ts: str = "ts",
-    gap_seconds: int = 300,
-    value_agg: str = "count(*)::bigint AS n_events",
-) -> str:
-    """DuckDB gaps-and-islands rendering of the same sessionization:
-    a new island starts when the gap to the previous event STRICTLY
-    exceeds the gap (Spark merges sessions that touch at exactly the
-    boundary)."""
-    return f"""
-        WITH ordered AS (
-            SELECT {key} AS k, {ts} AS t,
-                   lag({ts}) OVER (PARTITION BY {key} ORDER BY {ts}) AS prev_t
-            FROM {table}
-        ),
-        marked AS (
-            SELECT k, t,
-                   CASE WHEN prev_t IS NULL
-                             OR date_diff('second', prev_t, t) > {gap_seconds}
-                        THEN 1 ELSE 0 END AS new_session
-            FROM ordered
-        ),
-        islands AS (
-            SELECT k, t,
-                   sum(new_session) OVER (
-                       PARTITION BY k ORDER BY t
-                       ROWS UNBOUNDED PRECEDING) AS sid
-            FROM marked
-        )
-        SELECT k, min(t) AS session_start,
-               max(t) + INTERVAL {gap_seconds} SECOND AS session_end,
-               {value_agg}
-        FROM islands GROUP BY k, sid
-    """

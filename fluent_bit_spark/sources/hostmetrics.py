@@ -138,20 +138,6 @@ def cpu_percent_df(
     )
 
 
-def cpu_record(
-    interval_sec: float = 1.0, read_proc=None
-) -> dict[str, float]:
-    """Live two-snapshot sample (blocks interval_sec like the
-    reference's collect cadence)."""
-    import time
-
-    ticks = os.sysconf("SC_CLK_TCK")
-    pre = _read("/proc/stat", read_proc() if read_proc else None)
-    time.sleep(interval_sec)
-    now = _read("/proc/stat", read_proc() if read_proc else None)
-    return cpu_percent_record(pre, now, interval_sec, ticks)
-
-
 # ------------------------------------------------------------- in_mem
 
 

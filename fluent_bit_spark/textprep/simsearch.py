@@ -301,26 +301,6 @@ def lsh_buckets(
     return df.withColumn(out_col, F.expr(bucket_expr(vec_col, planes)))
 
 
-def ivf_assign_expr(vec_col: str, centroids: list[list[float]]) -> str:
-    """Nearest-centroid cell id (argmax of dot with unit centroids;
-    first index wins ties — list_position semantics in both engines).
-
-    Interpreted-expression form kept for reference/tests; the hot path
-    uses ``cell_assign_udf`` (same math, numpy over Arrow). The dot
-    array is bound ONCE via a lambda so it is not evaluated twice."""
-    dots = []
-    for c in centroids:
-        arr = "array({})".format(",".join(f"cast({x!r} as double)" for x in c))
-        dots.append("(" + _DOT.format(a=vec_col, b=arr) + ")")
-    arr_all = "array({})".format(",".join(dots))
-    # aggregate's init binds arr_all to a variable: each dot product
-    # is evaluated exactly once (the merge lambda ignores its input)
-    return (
-        f"aggregate(array(1), {arr_all}, (ds, _i) -> ds, "
-        f"ds -> array_position(ds, array_max(ds)) - 1)"
-    )
-
-
 # ---- Arrow-vectorized index math ------------------------------------
 
 _CHUNK = 4096  # rows per numpy slab: bounds (rows, cells, dim) temporaries

@@ -7,12 +7,18 @@
 
 The config is the reference's own format: classic ini (with @SET /
 @INCLUDE / ${VAR} / [SERVICE] Parsers_File) or the yaml form —
-anything load_classic_conf accepts. Batch mode materializes every
-[OUTPUT] under --out-dir and prints per-output counts as one JSON
-line: the rows each output delivered (0 for an output dropped after
-its Retry_Limit), or the rows routed to a null/stdout/counter/
-flowcounter output; --streaming follows tail inputs with checkpointed resume
-(foreachBatch delivery, [SERVICE] Flush as the trigger interval).
+anything load_classic_conf accepts. Batch mode delivers every
+[OUTPUT] under --out-dir/<output id> and prints per-output counts as
+one JSON line: the rows each output delivered (0 for an output
+dropped after its Retry_Limit), the rows routed to a null/stdout
+output, and for counter/flowcounter the rows of their aggregate
+(counter reports 1), not the rows routed to them.
+
+--streaming follows the tail inputs with checkpointed resume and runs
+the same batch plan and delivery once per micro-batch, under
+--out-dir/batch_id=<n>/<output id> ([SERVICE] Flush is the trigger
+interval). An output dropped after its Retry_Limit loses that batch:
+the checkpoint still moves past it.
 """
 
 from __future__ import annotations
@@ -35,6 +41,8 @@ def main() -> None:
     ap.add_argument("--checkpoint", help="checkpoint dir (streaming)")
     ap.add_argument("--master", help="override master (default: from env)")
     args = ap.parse_args()
+    if args.streaming and not args.checkpoint:
+        ap.error("--streaming requires --checkpoint")
 
     from fluent_bit_spark.classic import (
         build_classic_pipeline,
@@ -48,8 +56,6 @@ def main() -> None:
     sections = load_classic_conf(args.conf)
 
     if args.streaming:
-        if not args.checkpoint:
-            ap.error("--streaming requires --checkpoint")
         q = start_classic_stream(
             spark, sections, args.out_dir, args.checkpoint, available_now=True
         )

@@ -241,15 +241,28 @@ def test_unsupported_plugins_error(spark):
         )
 
 
+def _delivered_lines(out_dir, pattern: str = "**") -> list[str]:
+    """Every line written under ``out_dir`` (recursively), sorted."""
+    import pathlib
+
+    return sorted(
+        ln
+        for p in pathlib.Path(out_dir).glob(f"{pattern}/part-*")
+        for ln in p.read_text().splitlines()
+    )
+
+
 def test_streaming_classic_tail_follow(spark, tmp_path):
     """Streaming classic mode: tail follows the path; new files land
     in new batches through the same filters (in_tail + checkpoint)."""
+    import json
+
     from fluent_bit_spark.classic import start_classic_stream
     from fluent_bit_spark.streaming.job import run_stream_to_completion
 
     src = tmp_path / "logs"
     src.mkdir()
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    out, ckpt = tmp_path / "out", str(tmp_path / "ckpt")
     (src / "a.log").write_text("key=1 lvl=info\nkey=2 lvl=err\n")
     parsers = parse_parsers_conf("[PARSER]\n    Name lf\n    Format logfmt\n")
     conf = f"""
@@ -271,18 +284,160 @@ def test_streaming_classic_tail_follow(spark, tmp_path):
     Name  file
     Match t.*
 """
-    q = start_classic_stream(spark, conf, out, ckpt, parsers=parsers)
+
+    def keys(batch_id: int) -> list[str]:
+        lines = _delivered_lines(out / f"batch_id={batch_id}" / "file.0")
+        return [json.loads(ln)["key"] for ln in lines]
+
+    q = start_classic_stream(spark, conf, str(out), ckpt, parsers=parsers)
     run_stream_to_completion(q)
-    got = spark.read.parquet(out + "/file.0")
-    assert got.count() == 1 and got.first()["key"] == "2"
+    assert keys(0) == ["2"]
 
     # follow: a new file arrives; restart picks up ONLY the new one
     (src / "b.log").write_text("key=3 lvl=err\n")
-    q2 = start_classic_stream(spark, conf, out, ckpt, parsers=parsers)
+    q2 = start_classic_stream(spark, conf, str(out), ckpt, parsers=parsers)
     run_stream_to_completion(q2)
-    rows = spark.read.parquet(out + "/file.0")
-    assert {r["key"] for r in rows.collect()} == {"2", "3"}
-    assert rows.select("batch_id").distinct().count() == 2
+    assert keys(1) == ["3"]
+    assert sorted(p.name for p in out.iterdir()) == ["batch_id=0", "batch_id=1"]
+
+
+def test_streaming_classic_matches_batch(spark, tmp_path):
+    """Each micro-batch runs the batch plan and delivery: summed over
+    the batch_id dirs, streaming delivers the lines batch mode does
+    for every output, with the tail properties and built-in parsers."""
+    from fluent_bit_spark.classic import start_classic_stream
+    from fluent_bit_spark.streaming.job import run_stream_to_completion
+
+    for d in ("a", "b", "web"):
+        (tmp_path / d).mkdir()
+    (tmp_path / "a" / "one.log").write_text(
+        "lvl=info msg=hello n=1\n\nlvl=err msg=bad n=2\n")
+    (tmp_path / "b" / "two.log").write_text("lvl=info msg=x n=3\n")
+    (tmp_path / "b" / "skip.log").write_text("lvl=info msg=skipped n=4\n")
+    access = '1.2.3.{} - u [10/Oct/2000:13:55:3{} -0700] "GET /{} HTTP/1.0" 200 5\n'
+    (tmp_path / "web" / "shop.log").write_text(
+        access.format(4, 6, "a") + access.format(5, 7, "b"))
+    (tmp_path / "web" / "api.log").write_text(access.format(6, 8, "c"))
+    conf = f"""
+[INPUT]
+    Name             tail
+    Path             {tmp_path}/a/*.log, {tmp_path}/b/*.log
+    Exclude_Path     *skip*
+    Skip_Empty_Lines on
+    Parser           logfmt
+    Tag              app.kv
+
+[INPUT]
+    Name      tail
+    Path      {tmp_path}/web
+    Tag       t.<name>
+    Tag_Regex (?<name>[a-z]+)\\.log$
+    Path_Key  file
+    Parser    apache
+
+[FILTER]
+    Name    grep
+    Match   app.*
+    Exclude lvl ^err$
+
+[OUTPUT]
+    Name  file
+    Match *
+
+[OUTPUT]
+    Name  loki
+    Match t.*
+
+[OUTPUT]
+    Name  counter
+    Match *
+"""
+    counts = run_classic_outputs(
+        build_classic_pipeline(spark, conf), str(tmp_path / "batch"))
+    assert counts == {"file.0": 5, "loki.1": 3, "counter.2": 1}
+
+    out = tmp_path / "stream"
+    q = start_classic_stream(spark, conf, str(out), str(tmp_path / "ckpt"))
+    run_stream_to_completion(q)
+    for oid in ("file.0", "loki.1"):
+        streamed = _delivered_lines(out, f"batch_id=*/{oid}/*")
+        assert streamed == _delivered_lines(tmp_path / "batch" / oid)
+    assert len(_delivered_lines(out, "batch_id=*/file.0/tag=t.shop")) == 2
+
+
+@pytest.mark.parametrize(
+    "piece",
+    [
+        "[INPUT]\n    Name dummy\n",
+        "[INPUT]\n    Name tail\n    Path {src}\n    multiline.parser java\n",
+        "[FILTER]\n    Name throttle\n    Match *\n    Rate 1\n",
+        "[STREAM_TASK]\n    Name w\n    Exec SELECT COUNT(*) FROM TAG:'*' "
+        "WINDOW TUMBLING (5 SECOND);\n",
+    ],
+    ids=["dummy", "multiline", "throttle", "window"],
+)
+def test_streaming_classic_refuses_cross_batch_state(spark, tmp_path, piece):
+    """Pieces whose state would span micro-batches raise at start."""
+    from fluent_bit_spark.classic import start_classic_stream
+
+    conf = f"[INPUT]\n    Name tail\n    Path {tmp_path}\n" + piece.format(
+        src=tmp_path)
+    with pytest.raises(ValueError):
+        start_classic_stream(
+            spark, conf, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_run_classic_job(spark, tmp_path, monkeypatch, capsys):
+    """jobs/run_classic.py in-process: batch prints its counts, and
+    --streaming delivers the same lines under batch_id=<n>."""
+    import json
+
+    import jobs.run_classic as job
+
+    (tmp_path / "logs").mkdir()
+    (tmp_path / "logs" / "a.log").write_text("k=1 lvl=err\nk=2 lvl=info\n")
+    conf = tmp_path / "fluent-bit.conf"
+    conf.write_text(f"""
+[INPUT]
+    Name   tail
+    Path   {tmp_path / "logs"}
+    Tag    app.log
+    Parser logfmt
+
+[OUTPUT]
+    Name  file
+    Match app.*
+
+[OUTPUT]
+    Name  counter
+    Match *
+""")
+    # main() imports get_spark from the session module at call time
+    monkeypatch.setattr(
+        "fluent_bit_spark.session.get_spark", lambda *a, **k: spark
+    )
+
+    def run(*args: str) -> dict:
+        monkeypatch.setattr(
+            "sys.argv", ["run_classic.py", "--conf", str(conf), *args])
+        job.main()
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    batch, stream = tmp_path / "batch", tmp_path / "stream"
+    assert run("--out-dir", str(batch)) == {
+        "mode": "batch", "counts": {"file.0": 2, "counter.1": 1}}
+    assert run(
+        "--out-dir", str(stream), "--streaming",
+        "--checkpoint", str(tmp_path / "ckpt"),
+    ) == {"mode": "streaming", "out_dir": str(stream)}
+    assert _delivered_lines(stream, "batch_id=*/file.0/*") == (
+        _delivered_lines(batch / "file.0"))
+    assert len(_delivered_lines(batch / "file.0")) == 2
+
+    with pytest.raises(SystemExit):
+        run("--out-dir", str(stream), "--streaming")
+    assert "--streaming requires --checkpoint" in capsys.readouterr().err
 
 
 def test_partial_match_filters_single_scan(spark):

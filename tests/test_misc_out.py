@@ -62,12 +62,15 @@ def test_logdna_line(rec_df):
 
 
 def test_slack_line(rec_df):
-    df = rec_df.withColumn("pi", F.lit(3.5).cast("double"))
+    df = (rec_df.withColumn("pi", F.lit(3.5).cast("double"))
+          .withColumn("ok", F.lit(None).cast("boolean"))
+          .withColumn("ratio", F.lit(None).cast("double")))
     line = df.select(to_slack_line(df, "ts").alias("l")).first()["l"]
-    # msgpack_object_print format with 9-digit nanos timestamp prefix
+    # msgpack_object_print format with 9-digit nanos timestamp prefix;
+    # a null of any type prints nil
     assert line == ('["timestamp": 1700000000.250000000, '
                     '{"message"=>"boot ok", "level"=>"err", "n"=>7, '
-                    '"pi"=>3.500000}]')
+                    '"pi"=>3.500000, "ok"=>nil, "ratio"=>nil}]')
     payload = json.loads(slack_payload([line]))
     assert payload["text"] == line + "\n"
 
