@@ -114,11 +114,17 @@ def ra_translate_col(
     return F.concat(*parts)
 
 
+def ra_key_present(columns: list[str], path: str) -> bool:
+    """Whether ``path`` can resolve against a frame with ``columns``:
+    ``$TAG`` paths always can, a key path needs its base key."""
+    path = path.strip()
+    return path.startswith("$TAG") or path.lstrip("$").split("[")[0] in columns
+
+
 def ra_col_safe(df: DataFrame, path: str, tag_col: str = "tag") -> Column:
     """ra_col, but a path whose base key is absent from the schema
     resolves to null instead of failing analysis — the reference's
     record accessor simply finds nothing for a missing key."""
-    name = path.strip().lstrip("$").split("[")[0]
-    if not path.strip().startswith("$TAG") and name not in df.columns:
+    if not ra_key_present(df.columns, path):
         return F.lit(None).cast("string")
     return ra_col(path, tag_col)

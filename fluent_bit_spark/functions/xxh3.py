@@ -70,10 +70,6 @@ def _r32(b: bytes, off: int) -> int:
     return struct.unpack_from("<I", b, off)[0]
 
 
-def _swap32(x: int) -> int:
-    return int.from_bytes(x.to_bytes(4, "little"), "big")
-
-
 def _swap64(x: int) -> int:
     return int.from_bytes(x.to_bytes(8, "little"), "big")
 

@@ -19,18 +19,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from fluent_bit_spark.session import per_jvm
 
-def observe_stage(df: DataFrame, stage: str, parse_ok_col: str | None = None,
-                  bytes_col: str | None = None, key_col: str | None = None,
-                  keys: list[str] | None = None) -> tuple[DataFrame, Observation]:
-    """Attach zero-cost observed metrics to a stage.
 
-    The observation holds ``records`` (and ``parse_failures`` /
-    ``bytes`` when their columns are given). With ``key_col``, it holds
-    one struct of those counters per name in ``keys`` instead (the
-    names are known at plan time, e.g. a pipeline's sinks), each
-    counting only the rows whose ``key_col`` equals that name.
-    """
+@per_jvm
+def _counter_cols(parse_ok_col: str | None, bytes_col: str | None,
+                  key_col: str | None, keys: list[str] | None) -> list[Column]:
     def counters(hit: Column) -> list[Column]:
         cols = [F.count(F.when(hit, 1)).alias("records")]
         if parse_ok_col:
@@ -43,10 +37,22 @@ def observe_stage(df: DataFrame, stage: str, parse_ok_col: str | None = None,
             ).alias("bytes"))
         return cols
 
-    obs = Observation(stage)
     if key_col is None:
-        return df.observe(obs, *counters(F.lit(True))), obs
-    per_key = [
-        F.struct(*counters(F.col(key_col) == k)).alias(k) for k in keys or []
-    ]
-    return df.observe(obs, *per_key), obs
+        return counters(F.lit(True))
+    return [F.struct(*counters(F.col(key_col) == k)).alias(k) for k in keys or []]
+
+
+def observe_stage(df: DataFrame, stage: str, parse_ok_col: str | None = None,
+                  bytes_col: str | None = None, key_col: str | None = None,
+                  keys: list[str] | None = None) -> tuple[DataFrame, Observation]:
+    """Attach zero-cost observed metrics to a stage.
+
+    The observation holds ``records`` (and ``parse_failures`` /
+    ``bytes`` when their columns are given). With ``key_col``, it holds
+    one struct of those counters per name in ``keys`` instead (the
+    names are known at plan time, e.g. a pipeline's sinks), each
+    counting only the rows whose ``key_col`` equals that name. The
+    counter Columns are built once per JVM (``session.per_jvm``).
+    """
+    obs = Observation(stage)
+    return df.observe(obs, *_counter_cols(parse_ok_col, bytes_col, key_col, keys)), obs

@@ -444,11 +444,6 @@ def apply_decoder_chain(
     return df
 
 
-def apply_decoder(df: DataFrame, rule: DecoderRule) -> DataFrame:
-    """Single-rule convenience wrapper over apply_decoder_chain."""
-    return apply_decoder_chain(df, rule.key, [rule])
-
-
 # ------------------------------------------------------------ top level
 
 

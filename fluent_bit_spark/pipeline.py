@@ -25,6 +25,14 @@ Scale design (10^12 rows):
 - aggregates: ``rollup`` reads the written sink files, never the
   input, so the parse is paid once; its groupBy partials combine
   map-side and the only shuffle is keyed on (sink, window).
+- driver cost: a call's Columns (HTML extract, parse layers, tag,
+  rewrite tags, routes explode, counters, rollup) are built once per
+  JVM (``session.per_jvm``) and reused by every later call, the way
+  fluent-bit compiles routes and record accessors once at config load;
+  so a ``${ENV}`` in a rewrite template resolves at the first build,
+  as the reference resolves it at config load
+  (flb_record_accessor.c:291-313). ``aggregates`` is built on first
+  use, and the ``metrics`` rows are one JSON literal.
 - resume: deterministic batch column + dynamic partition overwrite
   makes every batch write idempotent; a progress table records
   completed batches (the in_tail SQLite offset table analog,
@@ -33,8 +41,10 @@ Scale design (10^12 rows):
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +56,7 @@ from fluent_bit_spark.functions.timeparse import time_parse_col
 from fluent_bit_spark.metrics import observe_stage
 from fluent_bit_spark.parsers.compile import logfmt_map_fast_col, ltsv_map_col
 from fluent_bit_spark.router import Route, RewriteTagRule, apply_rewrite_tag, fan_out_exploded
+from fluent_bit_spark.session import per_jvm
 
 APACHE_RX = (
     r'^(\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}) [^ ]* ([^ ]*) \[([^\]]*)\] '
@@ -79,6 +90,77 @@ def _ga(arr: Column, i: int) -> Column:
     return F.when(v != "", v)
 
 
+@per_jvm
+def _parse_layers(text_col: str, ref_year: int) -> list[dict[str, Column]]:
+    """parse_stage's Columns, one ``withColumns`` layer per dependency
+    level: the format guard, the masked per-format inputs, the
+    key/value maps over them, then the unified fields."""
+    t = F.col(text_col)
+    is_a = F.col("fmt") == "apache"
+    is_s = F.col("fmt") == "syslog"
+    is_j = F.col("fmt") == "json"
+    is_l = F.col("fmt") == "ltsv"
+    is_f = F.col("fmt") == "logfmt"
+    aa, sa = F.col("_aa"), F.col("_sa")
+    jm, lm, fm = F.col("_jm"), F.col("_lm"), F.col("_fm")
+
+    return [
+        {"fmt": format_of(t)},
+        # mask non-matching rows so each format pays only for its own rows
+        {
+            "_ltsv_in": F.when(is_l, t),
+            "_logfmt_in": F.when(is_f, t),
+            "_aa": multi_extract(F.when(is_a, t), APACHE_RX, 7),
+            "_sa": multi_extract(F.when(is_s, t), SYSLOG_RX, 6),
+            "_jm": F.when(is_j, F.from_json(t, "map<string,string>")),
+        },
+        {"_lm": ltsv_map_col("_ltsv_in"), "_fm": logfmt_map_fast_col("_logfmt_in")},
+        {
+            "host": (
+                F.when(is_a, _ga(aa, 1))
+                .when(is_s, _ga(sa, 3))
+                .when(is_l, F.element_at(lm, "host"))
+            ),
+            "user": F.when(is_a, _ga(aa, 2)),
+            "method": F.when(is_a, _ga(aa, 4)),
+            "path": F.when(is_a, _ga(aa, 5)).when(is_l, F.element_at(lm, "path")),
+            "code": (
+                F.when(is_a, _ga(aa, 6))
+                .when(is_l, F.element_at(lm, "status"))
+                .when(is_f, F.element_at(fm, "status"))
+                .try_cast("int")
+            ),
+            "size": (
+                F.when(is_a, _ga(aa, 7))
+                .when(is_l, F.element_at(lm, "size"))
+                .when(is_f, F.element_at(fm, "bytes"))
+                .try_cast("long")
+            ),
+            "level": F.when(is_f, F.element_at(fm, "level")).when(is_s, _ga(sa, 4)),
+            "message": (
+                F.when(is_s, _ga(sa, 6))
+                .when(is_j, F.element_at(jm, "log"))
+                .when(is_f, F.element_at(fm, "msg"))
+            ),
+            "event_time": (
+                F.when(is_a, time_parse_col(_ga(aa, 3), "%d/%b/%Y:%H:%M:%S %z"))
+                .when(is_s, time_parse_col(_ga(sa, 2), "%b %d %H:%M:%S", ref_year=ref_year))
+                .when(is_j, time_parse_col(F.element_at(jm, "time"), "%Y-%m-%dT%H:%M:%S.%L"))
+                .when(is_l, time_parse_col(F.element_at(lm, "time"), "%Y-%m-%dT%H:%M:%S.%L"))
+                .when(is_f, time_parse_col(F.element_at(fm, "ts"), "%Y-%m-%dT%H:%M:%S.%L"))
+            ),
+            "_parse_ok": F.coalesce(
+                F.when(is_a, aa.isNotNull())
+                .when(is_s, sa.isNotNull())
+                .when(is_j, jm.isNotNull())
+                .when(is_l, F.coalesce(F.size(lm) > 0, F.lit(False)))
+                .otherwise(F.coalesce(F.size(fm) > 0, F.lit(False))),
+                F.lit(False),
+            ),
+        },
+    ]
+
+
 def parse_stage(df: DataFrame, text_col: str = "text", ref_year: int = 2026) -> DataFrame:
     """Multi-format parse into one unified schema.
 
@@ -90,95 +172,28 @@ def parse_stage(df: DataFrame, text_col: str = "text", ref_year: int = 2026) -> 
     JVM-side whole-stage codegen: the regex formats use single-pass
     multi_extract, logfmt uses the vectorized Catalyst fast path.
     """
-    t = F.col(text_col)
-    df = df.withColumn("fmt", format_of(t))
-    is_a = F.col("fmt") == "apache"
-    is_s = F.col("fmt") == "syslog"
-    is_j = F.col("fmt") == "json"
-    is_l = F.col("fmt") == "ltsv"
-    is_f = F.col("fmt") == "logfmt"
-
-    json_map = F.when(is_j, F.from_json(t, "map<string,string>"))
-    # mask non-matching rows so each format pays only for its own rows
-    df = (
-        df.withColumn("_ltsv_in", F.when(is_l, t))
-        .withColumn("_logfmt_in", F.when(is_f, t))
-        .withColumn("_aa", multi_extract(F.when(is_a, t), APACHE_RX, 7))
-        .withColumn("_sa", multi_extract(F.when(is_s, t), SYSLOG_RX, 6))
-        .withColumn("_jm", json_map)
-        .withColumn("_lm", ltsv_map_col("_ltsv_in"))
-        .withColumn("_fm", logfmt_map_fast_col("_logfmt_in"))
-    )
-    aa, sa = F.col("_aa"), F.col("_sa")
-    jm, lm, fm = F.col("_jm"), F.col("_lm"), F.col("_fm")
-
-    host = (
-        F.when(is_a, _ga(aa, 1))
-        .when(is_s, _ga(sa, 3))
-        .when(is_l, F.element_at(lm, "host"))
-    )
-    user = F.when(is_a, _ga(aa, 2))
-    method = F.when(is_a, _ga(aa, 4))
-    path = F.when(is_a, _ga(aa, 5)).when(is_l, F.element_at(lm, "path"))
-    code = (
-        F.when(is_a, _ga(aa, 6))
-        .when(is_l, F.element_at(lm, "status"))
-        .when(is_f, F.element_at(fm, "status"))
-        .try_cast("int")
-    )
-    size = (
-        F.when(is_a, _ga(aa, 7))
-        .when(is_l, F.element_at(lm, "size"))
-        .when(is_f, F.element_at(fm, "bytes"))
-        .try_cast("long")
-    )
-    level = F.when(is_f, F.element_at(fm, "level")).when(is_s, _ga(sa, 4))
-    message = (
-        F.when(is_s, _ga(sa, 6))
-        .when(is_j, F.element_at(jm, "log"))
-        .when(is_f, F.element_at(fm, "msg"))
-    )
-    event_time = (
-        F.when(is_a, time_parse_col(_ga(aa, 3), "%d/%b/%Y:%H:%M:%S %z"))
-        .when(is_s, time_parse_col(_ga(sa, 2), "%b %d %H:%M:%S", ref_year=ref_year))
-        .when(is_j, time_parse_col(F.element_at(jm, "time"), "%Y-%m-%dT%H:%M:%S.%L"))
-        .when(is_l, time_parse_col(F.element_at(lm, "time"), "%Y-%m-%dT%H:%M:%S.%L"))
-        .when(is_f, time_parse_col(F.element_at(fm, "ts"), "%Y-%m-%dT%H:%M:%S.%L"))
-    )
-    parse_ok = (
-        F.when(is_a, aa.isNotNull())
-        .when(is_s, sa.isNotNull())
-        .when(is_j, jm.isNotNull())
-        .when(is_l, F.coalesce(F.size(lm) > 0, F.lit(False)))
-        .otherwise(F.coalesce(F.size(fm) > 0, F.lit(False)))
-    )
-
-    return (
-        df.withColumn("host", host)
-        .withColumn("user", user)
-        .withColumn("method", method)
-        .withColumn("path", path)
-        .withColumn("code", code)
-        .withColumn("size", size)
-        .withColumn("level", level)
-        .withColumn("message", message)
-        .withColumn("event_time", event_time)
-        .withColumn("_parse_ok", F.coalesce(parse_ok, F.lit(False)))
-        .drop("_jm", "_lm", "_fm", "_ltsv_in", "_logfmt_in", "_aa", "_sa")
-    )
+    for layer in _parse_layers(text_col, ref_year):
+        df = df.withColumns(layer)
+    return df.drop("_jm", "_lm", "_fm", "_ltsv_in", "_logfmt_in", "_aa", "_sa")
 
 
 def domain_of(url_col: Column) -> Column:
     return F.parse_url(url_col, F.lit("HOST"))
 
 
-def tag_stage(df: DataFrame) -> DataFrame:
-    """tag = web.<lang>.<tld> (FIXTURES.md §5)."""
+@per_jvm
+def _tag_cols() -> dict[str, Column]:
     fqdn = domain_of(F.col("url"))
     tld = F.substring_index(fqdn, ".", -1)
-    return df.withColumn("domain", fqdn).withColumn(
-        "tag", F.concat(F.lit("web."), F.col("lang"), F.lit("."), tld)
-    )
+    return {
+        "domain": fqdn,
+        "tag": F.concat(F.lit("web."), F.col("lang"), F.lit("."), tld),
+    }
+
+
+def tag_stage(df: DataFrame) -> DataFrame:
+    """tag = web.<lang>.<tld> (FIXTURES.md §5)."""
+    return df.withColumns(_tag_cols())
 
 
 DEFAULT_ROUTES = [
@@ -196,10 +211,32 @@ DEFAULT_REWRITES = [
 @dataclass
 class PipelineResult:
     routed: DataFrame
-    aggregates: DataFrame
     # every sink a row can be routed to, from the routes at plan time
     sinks: list[str]
     agg_window: str
+
+    @cached_property
+    def aggregates(self) -> DataFrame:
+        """``rollup`` of the lazy routed plan, built on first use
+        (``run_to_sinks`` rolls up the written files instead)."""
+        return rollup(self.routed, self.agg_window)
+
+
+@per_jvm
+def _rollup_cols(agg_window: str) -> tuple[list[Column], list[Column], list[Column]]:
+    """rollup's grouping, aggregate and output Columns."""
+    return (
+        [F.col("sink"), F.window(F.col("warc_ts"), agg_window).alias("w")],
+        [
+            F.count(F.lit(1)).alias("records"),
+            F.sum(F.length("text")).alias("bytes"),
+            F.sum((~F.col("_parse_ok")).cast("long")).alias("parse_failures"),
+        ],
+        [
+            F.col("sink"), F.col("w.start").alias("window_start"), F.col("records"),
+            F.col("bytes"), F.col("parse_failures"),
+        ],
+    )
 
 
 def rollup(routed: DataFrame, agg_window: str = "1 minute") -> DataFrame:
@@ -207,21 +244,15 @@ def rollup(routed: DataFrame, agg_window: str = "1 minute") -> DataFrame:
     ``agg_window`` of ``warc_ts``. Works on any frame with the routed
     columns: the lazy plan, the written sink files, or a watermarked
     stream."""
-    return (
-        routed.groupBy(
-            F.col("sink"),
-            F.window(F.col("warc_ts"), agg_window).alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("records"),
-            F.sum(F.length("text")).alias("bytes"),
-            F.sum((~F.col("_parse_ok")).cast("long")).alias("parse_failures"),
-        )
-        .select(
-            "sink", F.col("w.start").alias("window_start"), "records", "bytes",
-            "parse_failures",
-        )
-    )
+    keys, aggs, out = _rollup_cols(agg_window)
+    return routed.groupBy(*keys).agg(*aggs).select(*out)
+
+
+@per_jvm
+def _html_text_col() -> Column:
+    from fluent_bit_spark.textprep.html import html_to_text_col
+
+    return html_to_text_col(F.col("html"), keep="body")
 
 
 def build_pipeline(
@@ -244,11 +275,7 @@ def build_pipeline(
     exchange and no Python stage.
     """
     if from_html:
-        from fluent_bit_spark.textprep.html import html_to_text_col
-
-        pages = pages.withColumn(
-            "text", html_to_text_col(F.col("html"), keep="body")
-        )
+        pages = pages.withColumn("text", _html_text_col())
     parsed = parse_stage(pages, ref_year=ref_year)
     tagged = tag_stage(parsed)
 
@@ -263,10 +290,15 @@ def build_pipeline(
     routed = fan_out_exploded(rewritten, routes)
     return PipelineResult(
         routed=routed,
-        aggregates=rollup(routed, agg_window),
         sinks=list(dict.fromkeys(r.sink for r in routes)),
         agg_window=agg_window,
     )
+
+
+METRICS_TYPE = (
+    "array<struct<stage:string,sink:string,records_out:bigint,"
+    "parse_failures:bigint,bytes:bigint>>"
+)
 
 
 def run_to_sinks(
@@ -303,22 +335,17 @@ def run_to_sinks(
         .write.mode("overwrite").format(fmt).save(os.path.join(out_dir, "aggregates"))
     )
 
-    # one row per sink, as literals evaluated in the JVM: no Python
-    # worker starts; an empty table keeps its schema
+    # one row per sink that received rows, as one JSON literal parsed
+    # in the JVM: no Python worker starts, the plan's size does not
+    # grow with the sinks, and an empty table keeps its schema
     rows = [
-        F.struct(
-            F.lit("route").alias("stage"),
-            F.lit(sink).alias("sink"),
-            F.lit(c["records"]).cast("long").alias("records_out"),
-            F.lit(c["parse_failures"]).cast("long").alias("parse_failures"),
-            F.lit(c["bytes"]).cast("long").alias("bytes"),
-        )
-        for sink, c in observed.items()
+        {"stage": "route", "sink": sink, "records_out": c["records"],
+         "parse_failures": c["parse_failures"], "bytes": c["bytes"]}
+        for sink, c in observed.items() if c["records"]
     ]
     (
         spark.range(1, numPartitions=1)
-        .select(F.inline(F.array(*rows)))
-        .where(F.col("records_out") > 0)
+        .select(F.inline(F.from_json(F.lit(json.dumps(rows)), METRICS_TYPE)))
         .write.mode("overwrite").format(fmt).save(os.path.join(out_dir, "metrics"))
     )
     return {s: c["records"] for s, c in observed.items() if c["records"]}

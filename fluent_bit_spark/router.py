@@ -33,9 +33,10 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fluent_bit_spark.functions.accessor import ra_col_safe, ra_translate_col
+from fluent_bit_spark.functions.accessor import ra_col, ra_key_present, ra_translate_col
 from fluent_bit_spark.functions.globmatch import tag_glob_match, tag_match_col
 from fluent_bit_spark.parsers.compile import to_java_regex
+from fluent_bit_spark.session import per_jvm
 
 
 @dataclass
@@ -76,6 +77,11 @@ def fan_out(
     return {sink: df.filter(pred) for sink, pred in route_predicates(routes, tag_col).items()}
 
 
+@per_jvm
+def _sinks_explode(routes: list[Route], tag_col: str) -> Column:
+    return F.explode(routes_mask_col(routes, tag_col))
+
+
 def fan_out_exploded(
     df: DataFrame,
     routes: list[Route],
@@ -87,33 +93,24 @@ def fan_out_exploded(
     Write with ``.write.partitionBy(sink_col)`` for a one-scan
     multi-sink delivery; rows matching no route disappear (the
     reference drops chunks with an empty routes mask)."""
-    return df.withColumn(sink_col, F.explode(routes_mask_col(routes, tag_col)))
+    return df.withColumn(sink_col, _sinks_explode(routes, tag_col))
 
 
-def apply_rewrite_tag(
-    df: DataFrame,
+def _tags_col(
     rules: list[RewriteTagRule],
-    tag_col: str = "tag",
+    present: tuple[bool, ...],
+    tag_col: str,
     scope: Column | None = None,
-) -> DataFrame:
-    """Bounded second routing pass for rewrite_tag.
-
-    For each record the FIRST rule whose regex matches the key's value
-    fires (rewrite_tag.c:350-400 iterates rules and emits on match):
-    a copy is re-emitted with the translated tag; the original is kept
-    only if the firing rule's keep is true. Non-matching records pass
-    through untouched. Output = originals-kept UNION rewritten —
-    routing must be re-evaluated by the caller on the result.
-    """
-    if not rules:
-        return df
-
+) -> Column:
+    """Each row's surviving tag set under ``rules``; ``present[i]``
+    says whether rule i's key resolves in the frame (see
+    ``ra_key_present``)."""
     # matched_i: rule i fires (and no earlier rule fired)
     fired_any: Column = F.lit(False)
     new_tag: Column = F.lit(None).cast("string")
     keep_original: Column = F.lit(True)
-    for rule in rules:
-        value = ra_col_safe(df, rule.key, tag_col).cast("string")
+    for rule, has_key in zip(rules, present):
+        value = (ra_col(rule.key, tag_col) if has_key else F.lit(None)).cast("string")
         java_rx = to_java_regex(rule.pattern)
         m = F.coalesce(value.rlike(java_rx), F.lit(False))
         if scope is not None:
@@ -135,11 +132,41 @@ def apply_rewrite_tag(
     # branches formulation would evaluate the whole upstream plan twice
     # (at 10^12 rows: a second full parse of the table); explode keeps
     # a single scan and the same output multiset.
-    tags = F.when(
+    return F.when(
         new_tag.isNotNull() & keep_original, F.array(F.col(tag_col), new_tag)
     ).when(
         new_tag.isNotNull(), F.array(new_tag)
     ).otherwise(F.array(F.col(tag_col)))
+
+
+# the unscoped tag set is the same Column on every call; classic's
+# Match-scoped calls carry a scope Column and build their own
+_unscoped_tags_col = per_jvm(_tags_col)
+
+
+def apply_rewrite_tag(
+    df: DataFrame,
+    rules: list[RewriteTagRule],
+    tag_col: str = "tag",
+    scope: Column | None = None,
+) -> DataFrame:
+    """Bounded second routing pass for rewrite_tag.
+
+    For each record the FIRST rule whose regex matches the key's value
+    fires (rewrite_tag.c:350-400 iterates rules and emits on match):
+    a copy is re-emitted with the translated tag; the original is kept
+    only if the firing rule's keep is true. Non-matching records pass
+    through untouched. Output = originals-kept UNION rewritten —
+    routing must be re-evaluated by the caller on the result.
+    """
+    if not rules:
+        return df
+    columns = df.columns
+    present = tuple(ra_key_present(columns, r.key) for r in rules)
+    if scope is None:
+        tags = _unscoped_tags_col(rules, present, tag_col)
+    else:
+        tags = _tags_col(rules, present, tag_col, scope)
     return (
         df.withColumn("_tags", tags)
         .withColumn(tag_col, F.explode(F.col("_tags")))
@@ -152,12 +179,6 @@ def _n_groups(pattern: str) -> int:
     from fluent_bit_spark.parsers.compile import to_python_regex
 
     return re.compile(to_python_regex(pattern)).groups
-
-
-def glob_is_prefix(match: str) -> bool:
-    """True when the rule is a literal prefix glob — usable for
-    partition pruning on a tag-partitioned table."""
-    return match.endswith("*") and "*" not in match[:-1]
 
 
 def static_route_table(routes: list[Route], known_tags: list[str]) -> dict[str, list[str]]:

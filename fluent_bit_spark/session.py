@@ -6,8 +6,12 @@ shuffle partitioning) while remaining correct on local[N] test runs.
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import os
+from collections import OrderedDict
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -65,3 +69,47 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _freeze(value):
+    """A hashable stand-in for a builder argument: dataclasses (routes,
+    rewrite rules) become tuples of their fields, lists tuples."""
+    if dataclasses.is_dataclass(value):
+        return dataclasses.astuple(value)
+    if isinstance(value, (list, tuple)):
+        return tuple(_freeze(v) for v in value)
+    return value
+
+
+# one memo for every per_jvm builder: (gateway, builder, args) -> Columns
+_MEMO: OrderedDict = OrderedDict()
+
+
+def per_jvm(fn):
+    """Memoize a Column builder once per JVM, like ``functools.lru_cache``.
+
+    Unresolved Columns depend on no DataFrame, so a plan builder can
+    hand the same Column objects to every later call, the way fluent-bit
+    compiles its routes and record accessors once at config load
+    (flb_record_accessor.c:291-313). The key is the live py4j gateway
+    (``SparkContext._gateway``: a new JVM starts afresh), the builder
+    and its positional arguments, with routes and rules entered as
+    tuples of their fields. The 256 most recently used keys are kept;
+    ``per_jvm.cache_clear()`` empties the memo.
+    """
+
+    @functools.wraps(fn)
+    def cached(*args):
+        key = (SparkContext._gateway, fn, _freeze(args))
+        if key in _MEMO:
+            _MEMO.move_to_end(key)
+            return _MEMO[key]
+        value = _MEMO[key] = fn(*args)
+        if len(_MEMO) > 256:
+            _MEMO.popitem(last=False)
+        return value
+
+    return cached
+
+
+per_jvm.cache_clear = _MEMO.clear

@@ -1,9 +1,9 @@
 """Streaming form of the parse -> enrich -> route -> aggregate pipeline.
 
 The batch pipeline (pipeline.build_pipeline) is a pure logical-plan
-builder, so the SAME transformation chain runs under readStream: this
-module only supplies the streaming source, sink wiring, watermarking,
-and checkpointing.
+builder, so both queries call it on the readStream source and take its
+``routed`` plan: this module only supplies the streaming source, sink
+wiring, watermarking, and checkpointing.
 
 Reference mapping:
 - in_tail checkpointed offsets (plugins/in_tail/tail_sql.h:30-44)
@@ -32,14 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from fluent_bit_spark.pipeline import (
-    DEFAULT_REWRITES,
-    DEFAULT_ROUTES,
-    parse_stage,
-    rollup,
-    tag_stage,
-)
-from fluent_bit_spark.router import RewriteTagRule, Route, apply_rewrite_tag, fan_out_exploded
+from fluent_bit_spark.pipeline import build_pipeline, rollup
+from fluent_bit_spark.router import RewriteTagRule, Route
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -102,21 +96,6 @@ def read_pages_stream(
     return reader.parquet(source_dir)
 
 
-def streaming_routed(
-    pages: DataFrame,
-    routes: list[Route] | None = None,
-    rewrites: list[RewriteTagRule] | None = None,
-    ref_year: int = 2026,
-) -> DataFrame:
-    """The stateless part of the pipeline, streaming-safe as-is."""
-    parsed = parse_stage(pages, ref_year=ref_year)
-    tagged = tag_stage(parsed)
-    rewritten = apply_rewrite_tag(
-        tagged, rewrites if rewrites is not None else DEFAULT_REWRITES
-    )
-    return fan_out_exploded(rewritten, routes or DEFAULT_ROUTES)
-
-
 def start_routed_stream(
     spark: SparkSession,
     source_dir: str,
@@ -128,7 +107,9 @@ def start_routed_stream(
 ) -> StreamingQuery:
     """Routed delivery: one partitioned parquet write per micro-batch
     via foreachBatch (idempotent on retry thanks to batch_id dirs)."""
-    routed = streaming_routed(read_pages_stream(spark, source_dir), routes, rewrites)
+    routed = build_pipeline(
+        read_pages_stream(spark, source_dir), routes=routes, rewrites=rewrites
+    ).routed
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -161,7 +142,7 @@ def start_aggregate_stream(
 ) -> StreamingQuery:
     """Windowed per-sink aggregates (out_flowcounter shape) with an
     event-time watermark; append-mode parquet of finalized windows."""
-    routed = streaming_routed(read_pages_stream(spark, source_dir), routes)
+    routed = build_pipeline(read_pages_stream(spark, source_dir), routes=routes).routed
     aggs = rollup(routed.withWatermark("warc_ts", watermark_delay), window_duration)
     writer = (
         aggs.writeStream.outputMode("append")

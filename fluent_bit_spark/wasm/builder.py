@@ -13,8 +13,6 @@ relative depths, so no fixups are needed.
 
 from __future__ import annotations
 
-import struct
-
 from .module import F32, F64, I32, I64
 
 # ------------------------------------------------------------- encoding
@@ -102,10 +100,6 @@ def local_set(i: int) -> bytes:
     return b"\x21" + uleb(i)
 
 
-def local_tee(i: int) -> bytes:
-    return b"\x22" + uleb(i)
-
-
 def global_get(i: int) -> bytes:
     return b"\x23" + uleb(i)
 
@@ -116,18 +110,6 @@ def global_set(i: int) -> bytes:
 
 def i32_const(n: int) -> bytes:
     return b"\x41" + sleb(n if n < 0x80000000 else n - 0x100000000)
-
-
-def i64_const(n: int) -> bytes:
-    return b"\x42" + sleb(n if n < 0x8000000000000000 else n - 0x10000000000000000)
-
-
-def f32_const(v: float) -> bytes:
-    return b"\x43" + struct.pack("<f", v)
-
-
-def f64_const(v: float) -> bytes:
-    return b"\x44" + struct.pack("<d", v)
 
 
 def _memarg(op: int, offset: int, align: int = 0) -> bytes:
@@ -144,26 +126,6 @@ def i32_load8_u(offset: int = 0) -> bytes:
 
 def i32_store(offset: int = 0) -> bytes:
     return _memarg(0x36, offset, 2)
-
-
-def i32_store8(offset: int = 0) -> bytes:
-    return _memarg(0x3A, offset)
-
-
-def i64_load(offset: int = 0) -> bytes:
-    return _memarg(0x29, offset, 3)
-
-
-def i64_store(offset: int = 0) -> bytes:
-    return _memarg(0x37, offset, 3)
-
-
-def f64_load(offset: int = 0) -> bytes:
-    return _memarg(0x2B, offset, 3)
-
-
-def f64_store(offset: int = 0) -> bytes:
-    return _memarg(0x39, offset, 3)
 
 
 MEMORY_SIZE = b"\x3f\x00"

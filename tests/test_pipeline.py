@@ -18,7 +18,8 @@ from fluent_bit_spark.pipeline import (
     run_resumable,
     run_to_sinks,
 )
-from fluent_bit_spark.router import Route
+from fluent_bit_spark.router import RewriteTagRule, Route
+from fluent_bit_spark.session import per_jvm
 
 N = 500
 
@@ -157,7 +158,9 @@ def test_run_to_sinks_scans_input_once(spark, pages, tmp_path):
     sink no row reaches is absent from each of them."""
     inp = str(tmp_path / "pages_in")
     pages.write.parquet(inp)
-    routes = DEFAULT_ROUTES + [Route("sink_none", "nomatch.*")]
+    # a sink name that JSON and the partition path must both escape
+    odd = 'we"ird\\ sink \u00e9\u6f22'
+    routes = DEFAULT_ROUTES + [Route("sink_none", "nomatch.*"), Route(odd, "web.en.*")]
     result = build_pipeline(spark.read.parquet(inp), routes=routes)
     out = tmp_path / "out"
     group = f"pipeline-scan-once-{id(result)}"
@@ -180,7 +183,9 @@ def test_run_to_sinks_scans_input_once(spark, pages, tmp_path):
         for r in aggs.groupBy("sink").agg(F.sum("records").alias("s")).collect()
     }
     assert counts == per_sink == sums
-    assert set(counts) == {"sink_all", "sink_en", "sink_com", "sink_errors"}
+    assert set(counts) == {"sink_all", "sink_en", "sink_com", "sink_errors", odd}
+    assert counts[odd] == counts["sink_en"]
+    assert odd.encode() in {r["sink"].encode() for r in metrics.collect()}
 
     # the observed bytes and parse failures equal the lazy plan's rollup
     want = {
@@ -256,3 +261,56 @@ def test_pipeline_from_html_matches_text_path(spark, pages):
     pb = b._jdf.queryExecution().executedPlan().toString()
     assert pa.count("Exchange") == pb.count("Exchange")
     assert "Python" not in pb and "ArrowEval" not in pb
+
+
+def _routed_rows(result):
+    cols = ["url", "fmt", "code", "tag", "sink"]
+    return sorted(map(str, result.routed.select(*cols).collect()))
+
+
+def test_column_memo_keys_on_routes_rules_and_key_presence(spark, pages):
+    """Columns built once per JVM serve only builds with the same
+    routes, rules and rule-key presence: every build over a warm memo
+    routes the rows a build over a cleared memo does."""
+    domain = pages.select(F.parse_url("url", F.lit("HOST"))).first()[0]
+    flagged = [RewriteTagRule("$flagged", "^true$", "flagged.$TAG[1]", keep=False)]
+    builds = [
+        {},
+        {"routes": [Route("x", "web.en.*")], "rewrites": []},
+        # the rule's key column is absent, then present
+        {"rewrites": flagged, "routes": [Route("f", "flagged.*"), Route("a", "*")]},
+        {"rewrites": flagged, "routes": [Route("f", "flagged.*"), Route("a", "*")],
+         "watchlist": [domain]},
+        {},
+    ]
+    warm = [_routed_rows(build_pipeline(pages, **kw)) for kw in builds]
+    cold = []
+    for kw in builds:
+        per_jvm.cache_clear()
+        cold.append(_routed_rows(build_pipeline(pages, **kw)))
+    assert warm == cold
+    assert warm[0] == warm[-1]
+    assert any("flagged." in r for r in warm[3])
+    assert not any("flagged." in r for r in warm[2])
+
+
+def test_warm_call_round_trips(spark, pages, tmp_path, monkeypatch):
+    """A warm build_pipeline + run_to_sinks call reuses the Columns of
+    the first one, so it makes few py4j round trips (about 4.7k when
+    every call built its Columns afresh)."""
+    from py4j import clientserver, java_gateway
+
+    run_to_sinks(build_pipeline(pages, from_html=True), str(tmp_path / "warm"))
+    calls = []
+    for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+        send = cls.send_command
+
+        def counted(self, command, _send=send):
+            calls.append(1)
+            return _send(self, command)
+
+        monkeypatch.setattr(cls, "send_command", counted)
+    counts = run_to_sinks(build_pipeline(pages, from_html=True), str(tmp_path / "out"))
+    monkeypatch.undo()
+    assert counts
+    assert len(calls) < 1000
