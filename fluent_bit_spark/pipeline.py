@@ -239,13 +239,27 @@ def _rollup_cols(agg_window: str) -> tuple[list[Column], list[Column], list[Colu
     )
 
 
+# the routed columns rollup reads
+ROLLUP_INPUTS = ("sink", "warc_ts", "text", "_parse_ok")
+
+
 def rollup(routed: DataFrame, agg_window: str = "1 minute") -> DataFrame:
     """out_flowcounter per sink: records, bytes and parse failures per
-    ``agg_window`` of ``warc_ts``. Works on any frame with the routed
-    columns: the lazy plan, the written sink files, or a watermarked
-    stream."""
+    ``agg_window`` of ``warc_ts``. Works on any frame with the
+    ``ROLLUP_INPUTS`` columns: the lazy plan, the written sink files,
+    or one streaming micro-batch."""
     keys, aggs, out = _rollup_cols(agg_window)
     return routed.groupBy(*keys).agg(*aggs).select(*out)
+
+
+def total_aggregates(partials: DataFrame) -> DataFrame:
+    """The total of ``rollup`` partials (one per micro-batch or unit):
+    records, bytes and parse failures summed per (sink, window_start).
+    The counts are additive, so this equals ``rollup`` over all the
+    partials' rows at once."""
+    return partials.groupBy("sink", "window_start").agg(
+        *(F.sum(c).alias(c) for c in ("records", "bytes", "parse_failures"))
+    )
 
 
 @per_jvm

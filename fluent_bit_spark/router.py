@@ -10,15 +10,13 @@ Reference:
   keeps the original record.
 
 Spark design for 100 TB:
-- The route table is computed ONCE on the driver (like the reference's
-  boot-time wiring); each sink gets a constant-folded predicate.
-- Fan-out has two physical modes:
-  * per-sink filtered writes — N scans or one cached scan, each write
-    gets predicate pushdown; best when sinks are few and selective.
-  * single-pass exploded write — materialize ``sinks: array<string>``
-    (the routes bitmask as data), explode, write once partitioned by
-    sink; one shuffle-free pass over the data, best when most rows hit
-    multiple sinks. This mirrors the reference's bitmask exactly.
+- The route table is compiled ONCE per JVM (like the reference's
+  boot-time wiring): each route's glob becomes a constant-folded
+  predicate inside ``routes_mask_col``.
+- Fan-out is a single-pass exploded write: materialize
+  ``sinks: array<string>`` (the routes bitmask as data), explode, write
+  once partitioned by sink; one shuffle-free pass over the data,
+  whatever the sink count. This mirrors the reference's bitmask exactly.
 - rewrite_tag is a bounded second routing pass: the reference re-emits
   through in_emitter (plugins/in_emitter/emitter.c:123) and re-routes;
   here the rewritten rows are unioned and routing predicates are
@@ -34,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.functions.accessor import ra_col, ra_key_present, ra_translate_col
-from fluent_bit_spark.functions.globmatch import tag_glob_match, tag_match_col
+from fluent_bit_spark.functions.globmatch import tag_match_col
 from fluent_bit_spark.parsers.compile import to_java_regex
 from fluent_bit_spark.session import per_jvm
 
@@ -53,11 +51,6 @@ class RewriteTagRule:
     keep: bool  # keep the original record too?
 
 
-def route_predicates(routes: list[Route], tag_col: str = "tag") -> dict[str, Column]:
-    """Driver-side route table: sink -> constant predicate Column."""
-    return {r.sink: tag_match_col(tag_col, r.match) for r in routes}
-
-
 def routes_mask_col(routes: list[Route], tag_col: str = "tag") -> Column:
     """The routes bitmask as data: array of sink names this row hits
     (flb_routes_mask_set_by_tag). Enables single-pass fan-out."""
@@ -66,15 +59,6 @@ def routes_mask_col(routes: list[Route], tag_col: str = "tag") -> Column:
     ]
     arr = F.array(*pairs)
     return F.filter(arr, lambda x: x.isNotNull())
-
-
-def fan_out(
-    df: DataFrame,
-    routes: list[Route],
-    tag_col: str = "tag",
-) -> dict[str, DataFrame]:
-    """Per-sink filtered DataFrames (predicate-pushdown mode)."""
-    return {sink: df.filter(pred) for sink, pred in route_predicates(routes, tag_col).items()}
 
 
 @per_jvm
@@ -180,9 +164,3 @@ def _n_groups(pattern: str) -> int:
 
     return re.compile(to_python_regex(pattern)).groups
 
-
-def static_route_table(routes: list[Route], known_tags: list[str]) -> dict[str, list[str]]:
-    """Boot-time wiring like flb_router_connect: tag -> sink list."""
-    return {
-        t: [r.sink for r in routes if tag_glob_match(t, r.match)] for t in known_tags
-    }

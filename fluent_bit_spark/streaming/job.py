@@ -3,36 +3,41 @@
 The batch pipeline (pipeline.build_pipeline) is a pure logical-plan
 builder, so both queries call it on the readStream source and take its
 ``routed`` plan: this module only supplies the streaming source, sink
-wiring, watermarking, and checkpointing.
+wiring and checkpointing.
 
 Reference mapping:
 - in_tail checkpointed offsets (plugins/in_tail/tail_sql.h:30-44)
-    -> checkpointLocation: the stream's file-source log + state store
-       survive a kill; restart resumes exactly where it stopped.
+    -> checkpointLocation: the stream's file-source log survives a
+       kill; restart resumes exactly where it stopped.
 - engine Flush interval (src/flb_engine.c:160)
     -> trigger (processingTime / availableNow micro-batches).
 - routing + per-sink delivery
     -> foreachBatch writing one partitioned parquet dir per batch
        (partitionBy(sink)), idempotent per batch_id.
-- stream processor windows (flb_sp window timers)
-    -> event-time window aggregates with a watermark; the reference
-       has NO late-data handling (processing-time only, SURVEY §2.6),
-       the watermark is the Spark-native upgrade.
+- out_flowcounter / stream processor windows (flb_sp window timers)
+    -> per-micro-batch window aggregates: each batch writes its own
+       ``rollup`` partial under ``aggregates/batch_id=<n>/`` and
+       readers sum the partials with ``pipeline.total_aggregates``.
+       Counts and sums are additive, so there is no state store, no
+       watermark and no late row is dropped; the reference has no
+       late-data handling either (processing-time only, SURVEY §2.6).
 
-Scale: the stateful aggregate keys on (sink, window) — small state;
-the routed fan-out itself is stateless, so executors scale linearly
-with input partitions.
+Scale: both queries are stateless, so executors scale linearly with
+input partitions. Each query projects ``routed`` down to the columns
+it writes BEFORE ``writeStream``: the foreachBatch frame is a plan that
+has already run, so nothing done inside the callback prunes the scan.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from fluent_bit_spark.pipeline import build_pipeline, rollup
+from fluent_bit_spark.pipeline import ROLLUP_INPUTS, build_pipeline, rollup
 from fluent_bit_spark.router import RewriteTagRule, Route
 
 PAGES_SCHEMA = (
@@ -105,29 +110,15 @@ def start_routed_stream(
     rewrites: list[RewriteTagRule] | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Routed delivery: one partitioned parquet write per micro-batch
-    via foreachBatch (idempotent on retry thanks to batch_id dirs)."""
+    """Routed delivery: each micro-batch writes its rows to
+    ``sinks/batch_id=<n>/sink=<s>/``."""
     routed = build_pipeline(
         read_pages_stream(spark, source_dir), routes=routes, rewrites=rewrites
-    ).routed
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.drop("html")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "sink")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(os.path.join(out_dir, "sinks"))
-        )
-
-    writer = (
-        routed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "routed"))
+    ).routed.drop("html")
+    return _start_per_batch(
+        routed, lambda batch: batch, os.path.join(out_dir, "sinks"), ["sink"],
+        os.path.join(checkpoint_dir, "routed"), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_aggregate_stream(
@@ -136,19 +127,48 @@ def start_aggregate_stream(
     out_dir: str,
     checkpoint_dir: str,
     window_duration: str = "1 minute",
-    watermark_delay: str = "5 minutes",
     routes: list[Route] | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Windowed per-sink aggregates (out_flowcounter shape) with an
-    event-time watermark; append-mode parquet of finalized windows."""
-    routed = build_pipeline(read_pages_stream(spark, source_dir), routes=routes).routed
-    aggs = rollup(routed.withWatermark("warc_ts", watermark_delay), window_duration)
-    writer = (
-        aggs.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "aggregates"))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "aggregates"))
+    """Windowed per-sink aggregates (out_flowcounter shape): each
+    micro-batch writes its ``rollup`` partial to
+    ``aggregates/batch_id=<n>/``; ``pipeline.total_aggregates`` sums
+    them."""
+    routed = build_pipeline(
+        read_pages_stream(spark, source_dir), routes=routes
+    ).routed.select(*ROLLUP_INPUTS)
+    return _start_per_batch(
+        routed, lambda batch: rollup(batch, window_duration),
+        os.path.join(out_dir, "aggregates"), [],
+        os.path.join(checkpoint_dir, "aggregates"), available_now,
+    )
+
+
+def _start_per_batch(
+    stream: DataFrame,
+    output_of: Callable[[DataFrame], DataFrame],
+    path: str,
+    partition_cols: list[str],
+    checkpoint: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start a foreachBatch query whose batch ``n`` writes
+    ``output_of(batch)`` under ``path/batch_id=<n>/`` with dynamic
+    partition overwrite: a batch replayed after a kill overwrites only
+    its own partition, so a retry is idempotent."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            output_of(batch_df)
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .partitionBy("batch_id", *partition_cols)
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(path)
+        )
+
+    writer = stream.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -15,9 +15,13 @@ by sink), rolls aggregates/ up from those files, and writes metrics/ as
 one row per sink (records_out, parse_failures, bytes) observed from the
 sink write; it prints the rows per sink (resumable variant:
 pipeline.run_resumable). --streaming runs the Structured Streaming
-form with checkpointed resume. On a real cluster nothing changes but
---master/--num-executors on the spark-submit line — the plan is
-cluster-size agnostic (partitioning via AQE + explicit repartitions).
+form with checkpointed resume: each micro-batch <n> writes its routed
+rows to sinks/batch_id=<n>/sink=<s>/ and its window-aggregate partial
+to aggregates/batch_id=<n>/; pipeline.total_aggregates sums the
+partials into the batch mode's aggregates. On a real cluster nothing
+changes but --master/--num-executors on the spark-submit line — the
+plan is cluster-size agnostic (partitioning via AQE + explicit
+repartitions).
 """
 
 from __future__ import annotations

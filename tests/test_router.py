@@ -2,13 +2,12 @@
 
 from pyspark.sql import functions as F
 
+from fluent_bit_spark.functions.globmatch import tag_glob_match
 from fluent_bit_spark.router import (
     RewriteTagRule,
     Route,
     apply_rewrite_tag,
-    fan_out,
     fan_out_exploded,
-    static_route_table,
 )
 
 ROUTES = [
@@ -29,23 +28,10 @@ def _tag_df(spark):
     )
 
 
-def test_fan_out_matches_static_table(spark):
-    df = _tag_df(spark)
-    sinks = fan_out(df, ROUTES)
-    table = static_route_table(ROUTES, TAGS)
-    for sink, sdf in sinks.items():
-        got = {r["tag"] for r in sdf.collect()}
-        want = {t for t in TAGS if sink in table[t]}
-        assert got == want, sink
-
-
-def test_fan_out_exploded_equals_per_sink(spark):
-    df = _tag_df(spark)
-    exploded = fan_out_exploded(df, ROUTES)
+def test_fan_out_exploded_matches_glob(spark):
+    exploded = fan_out_exploded(_tag_df(spark), ROUTES)
     got = {(r["sink"], r["tag"]) for r in exploded.collect()}
-    want = set()
-    for sink, sdf in fan_out(df, ROUTES).items():
-        want |= {(sink, r["tag"]) for r in sdf.collect()}
+    want = {(r.sink, t) for t in TAGS for r in ROUTES if tag_glob_match(t, r.match)}
     assert got == want
     # zero-route rows are dropped entirely (empty routes mask)
     assert "sink_none" not in {s for s, _ in got}

@@ -1,5 +1,7 @@
-"""Streaming pipeline tests: routed delivery parity with batch,
-checkpoint resume (only new files processed after restart)."""
+"""Streaming pipeline tests: routed delivery and summed aggregate
+partials equal batch, checkpoint resume (only new files processed after
+restart), a replayed batch overwrites only its own partition, and both
+queries scan only the columns they write."""
 
 from __future__ import annotations
 
@@ -9,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.datagen import generate_pages
-from fluent_bit_spark.pipeline import build_pipeline
+from fluent_bit_spark.pipeline import build_pipeline, total_aggregates
 from fluent_bit_spark.streaming.job import (
     run_stream_to_completion,
     start_aggregate_stream,
@@ -73,27 +75,77 @@ def test_streaming_checkpoint_resume_processes_only_new(spark, dirs):
     assert n2 == want
 
 
-def test_streaming_windowed_aggregates(spark, dirs):
-    src, out, ckpt = dirs
-    _write_pages(spark, 400, src, "f1")
-    q = start_aggregate_stream(spark, src, out, ckpt, watermark_delay="0 seconds")
+def _drain_aggregates(spark, src, out, ckpt):
+    q = start_aggregate_stream(spark, src, out, ckpt)
     run_stream_to_completion(q)
-    # append mode only emits windows closed by the watermark; with the
-    # availableNow drain the final watermark closes all but the last
-    # in-flight window(s) — at least the early ones must be present
-    aggs = spark.read.parquet(os.path.join(out, "aggregates"))
-    assert aggs.count() > 0
-    assert set(aggs.columns) == {
-        "sink", "window_start", "records", "bytes", "parse_failures"
+    return q
+
+
+def _totals(df):
+    return {
+        (r["sink"], r["window_start"]): (r["records"], r["bytes"], r["parse_failures"])
+        for r in df.collect()
     }
-    batch = build_pipeline(spark.read.parquet(os.path.join(src, "f1"))).aggregates
-    b = {
-        (r["sink"], r["window_start"]): (r["records"], r["bytes"])
-        for r in batch.collect()
+
+
+def _two_file_drains(spark, src, out, ckpt):
+    """400 pages as two files, each drained by its own availableNow run,
+    so ``aggregates`` holds two partials (batch 0 and batch 1)."""
+    for sub in ("f1", "f2"):
+        generate_pages(spark, 200, partitions=1).write.mode("overwrite").parquet(
+            os.path.join(src, sub)
+        )
+        _drain_aggregates(spark, src, out, ckpt)
+
+
+def test_streaming_aggregate_partials_sum_to_batch(spark, dirs):
+    src, out, ckpt = dirs
+    _two_file_drains(spark, src, out, ckpt)
+    partials = spark.read.parquet(os.path.join(out, "aggregates"))
+    assert set(partials.columns) == {
+        "sink", "window_start", "records", "bytes", "parse_failures", "batch_id"
     }
-    for r in aggs.collect():
-        key = (r["sink"], r["window_start"])
-        assert b[key] == (r["records"], r["bytes"])
+    assert {r["batch_id"] for r in partials.select("batch_id").distinct().collect()} == {0, 1}
+    # every window, the last open one included: no watermark withholds it
+    want = _totals(build_pipeline(spark.read.parquet(src + "/*")).aggregates)
+    assert want
+    assert _totals(total_aggregates(partials)) == want
+
+
+def test_streaming_aggregate_replay_overwrites_its_batch(spark, dirs):
+    src, out, ckpt = dirs
+    _two_file_drains(spark, src, out, ckpt)
+    agg_dir = os.path.join(out, "aggregates")
+    before = _totals(total_aggregates(spark.read.parquet(agg_dir)))
+
+    # a kill between the batch's write and its commit: the restarted
+    # query runs the newest batch again, under the same id
+    commits = os.path.join(ckpt, "aggregates", "commits")
+    newest = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(newest), f".{newest}.crc"):
+        os.remove(os.path.join(commits, name))
+    q = _drain_aggregates(spark, src, out, ckpt)
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [newest]
+
+    partials = spark.read.parquet(agg_dir)
+    assert _totals(total_aggregates(partials)) == before
+    parts = sorted(n for n in os.listdir(agg_dir) if n.startswith("batch_id="))
+    assert parts == ["batch_id=0", "batch_id=1"]
+
+
+@pytest.mark.parametrize("start", [start_routed_stream, start_aggregate_stream])
+def test_streaming_scans_only_written_columns(spark, dirs, start):
+    src, out, ckpt = dirs
+    _write_pages(spark, 100, src, "f1")
+    q = start(spark, src, out, ckpt)
+    run_stream_to_completion(q)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    read_schemas = [
+        line.split("ReadSchema: ", 1)[1] for line in plan.splitlines()
+        if "FileScan" in line and "ReadSchema: " in line
+    ]
+    assert read_schemas
+    assert all("html" not in rs for rs in read_schemas), read_schemas
 
 
 def test_streaming_multiline_state_across_batches(spark, dirs):
