@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from fluent_bit_spark.functions.globmatch import tag_glob_match
+from fluent_bit_spark.functions.globmatch import tag_glob_match, tag_match_col
 from fluent_bit_spark.router import (
     RewriteTagRule,
     Route,
@@ -28,10 +28,24 @@ def _tag_df(spark):
     )
 
 
-def test_fan_out_exploded_matches_glob(spark):
+def test_fan_out_matches_static_table(spark):
+    # the reference's boot-time route table, from the Python glob matcher
+    table = {t: {r.sink for r in ROUTES if tag_glob_match(t, r.match)} for t in TAGS}
     exploded = fan_out_exploded(_tag_df(spark), ROUTES)
+    for route in ROUTES:
+        got = {r["tag"] for r in exploded.filter(F.col("sink") == route.sink).collect()}
+        want = {t for t in TAGS if route.sink in table[t]}
+        assert got == want, route.sink
+
+
+def test_fan_out_exploded_equals_per_sink(spark):
+    df = _tag_df(spark)
+    exploded = fan_out_exploded(df, ROUTES)
     got = {(r["sink"], r["tag"]) for r in exploded.collect()}
-    want = {(r.sink, t) for t in TAGS for r in ROUTES if tag_glob_match(t, r.match)}
+    want = set()
+    for route in ROUTES:
+        sdf = df.filter(tag_match_col("tag", route.match))
+        want |= {(route.sink, r["tag"]) for r in sdf.collect()}
     assert got == want
     # zero-route rows are dropped entirely (empty routes mask)
     assert "sink_none" not in {s for s, _ in got}

@@ -98,7 +98,7 @@ def _two_file_drains(spark, src, out, ckpt):
         _drain_aggregates(spark, src, out, ckpt)
 
 
-def test_streaming_aggregate_partials_sum_to_batch(spark, dirs):
+def test_streaming_windowed_aggregates(spark, dirs):
     src, out, ckpt = dirs
     _two_file_drains(spark, src, out, ckpt)
     partials = spark.read.parquet(os.path.join(out, "aggregates"))
